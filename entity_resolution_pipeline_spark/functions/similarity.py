@@ -15,6 +15,9 @@ Reference formulas (pipeline/matching.py:84-96):
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -36,11 +39,7 @@ def levenshtein_sim(c1: Column | str, c2: Column | str) -> Column:
 def jaccard_sim(c1: Column | str, c2: Column | str) -> Column:
     """|T1 ∩ T2| / |T1 ∪ T2| over whitespace token sets; 0 on empty union
     (pipeline/matching.py:84-87)."""
-    t1 = distinct_tokens(c1)
-    t2 = distinct_tokens(c2)
-    union = F.size(F.array_union(t1, t2))
-    inter = F.size(F.array_intersect(t1, t2))
-    return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
+    return jaccard_sim_arrays(distinct_tokens(c1), distinct_tokens(c2))
 
 
 def jaccard_sim_arrays(t1: Column, t2: Column) -> Column:
@@ -67,11 +66,7 @@ def dice_sim_arrays(g1: Column, g2: Column) -> Column:
 def trigram_sim(c1: Column | str, c2: Column | str, n: int = 3) -> Column:
     """Dice coefficient 2|G1∩G2|/(|G1|+|G2|) over padded char n-gram sets
     (pipeline/matching.py:90-92, gram builder pipeline/utils.py:12-19)."""
-    g1 = char_ngrams(c1, n)
-    g2 = char_ngrams(c2, n)
-    denom = F.size(g1) + F.size(g2)
-    inter = F.size(F.array_intersect(g1, g2))
-    return F.when(denom > 0, 2.0 * inter / denom).otherwise(F.lit(0.0))
+    return dice_sim_arrays(char_ngrams(c1, n), char_ngrams(c2, n))
 
 
 def _jaro(s1: str, s2: str) -> float:
@@ -362,9 +357,25 @@ def jaro_winkler_sim(c1: Column | str, c2: Column | str) -> Column:
     return jaro_winkler_udf(a, b)
 
 
-SIM_FUNCTIONS = {
-    "levenshtein": levenshtein_sim,
-    "jaccard": jaccard_sim,
-    "trigram": trigram_sim,
-    "jaro_winkler": jaro_winkler_sim,
+class SimMethod(NamedTuple):
+    """A matching method split at the record/pair boundary.
+
+    ``feature`` maps a normalized string to its per-record
+    representation, computed once per record; ``sim`` scores two
+    representations into [0, 1].  ``set_based`` marks the
+    array-intersection similarities, cheap enough for every candidate
+    pair; the others are string kernels, run only on the pairs an upper
+    bound of the score cannot reject (see ``operators.matching``).
+    """
+
+    feature: Callable[[Column], Column]
+    sim: Callable[[Column, Column], Column]
+    set_based: bool
+
+
+SIM_METHODS = {
+    "levenshtein": SimMethod(lambda c: c, levenshtein_sim, False),
+    "jaccard": SimMethod(distinct_tokens, jaccard_sim_arrays, True),
+    "trigram": SimMethod(char_ngrams, dice_sim_arrays, True),
+    "jaro_winkler": SimMethod(lambda c: c, jaro_winkler_sim, False),
 }

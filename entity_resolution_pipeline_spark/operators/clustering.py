@@ -161,7 +161,10 @@ def connected_components(
 
 
 def assign_clusters(
-    records: DataFrame, matched: DataFrame, id_col: str = "url"
+    records: DataFrame,
+    matched: DataFrame,
+    id_col: str = "url",
+    cfg: ClusteringConfig | None = None,
 ) -> DataFrame:
     """records + matched(id1,id2) → records ⊕ ``entity_cluster`` column.
 
@@ -169,7 +172,7 @@ def assign_clusters(
     keeps a deterministic entity assignment (resume-stable).
     """
     edges = matched.select(F.col("id1").alias("src"), F.col("id2").alias("dst"))
-    labels = connected_components(edges)
+    labels = connected_components(edges, cfg)
     return (
         records.join(labels, records[id_col] == labels["id"], "left")
         .drop("id")

@@ -4,9 +4,11 @@
 Replaces the reference's eager single-process lifecycle
 (run_pipeline.py:22-40, SURVEY §3.1) with stage functions over a
 :class:`TableCatalog`: a stage re-runs only when its checkpoint is
-absent or its config fingerprint changed (SURVEY §3.4 target
-lifecycle).  ``spark-submit --py-files er.zip -m …pipeline --stage all``
-runs the same code on a real cluster.
+absent or its fingerprint changed (SURVEY §3.4 target lifecycle).  A
+stage's fingerprint covers the config it reads and its upstream stage's
+fingerprint, so a knob change re-runs the stage that reads it and every
+stage after it, never the ones before.  ``spark-submit --py-files er.zip
+-m …pipeline --stage all`` runs the same code on a real cluster.
 """
 
 from __future__ import annotations
@@ -24,19 +26,14 @@ from ..operators.blocking import (
     capped_postings,
     pairs_from_postings,
 )
-from ..operators.clustering import assign_clusters, cluster_representatives, connected_components
+from ..operators.clustering import assign_clusters, cluster_representatives
 from ..operators.evaluate import PairMetrics, pairwise_f1
 from ..operators.extract import extract_fields, rid_collision_count, rid_expr
-from ..operators.matching import matched_pairs, score_pairs
+from ..operators.matching import matched_pairs
 from ..sources.catalog import TableCatalog
 from ..sources.synth import labeled_pairs, synth_pages
 
 STAGES = ("synth", "extract", "block", "score", "cluster")
-
-
-def _fingerprint(cfg: PipelineConfig, stage: str, extra: dict | None = None) -> str:
-    blob = json.dumps({"cfg": asdict(cfg), "stage": stage, **(extra or {})}, sort_keys=True)
-    return hashlib.sha256(blob.encode()).hexdigest()[:16]
 
 
 class ERPipeline:
@@ -52,16 +49,41 @@ class ERPipeline:
         self.cfg = cfg or PipelineConfig()
         self.num_entities = num_entities
 
-    # each stage: skip when checkpoint exists with matching fingerprint
-    def _run_stage(self, name: str, build, force: bool = False, **fp_extra) -> DataFrame:
-        fp = _fingerprint(self.cfg, name, {"n": self.num_entities, **fp_extra})
-        if not force and self.catalog.exists(name, fp):
-            return self.catalog.read(name)
-        return self.catalog.write(name, build(), fingerprint=fp)
+    def _stage_knobs(self, stage: str) -> dict:
+        """The part of the config ``stage`` reads."""
+        cfg = self.cfg
+        return {
+            "synth": {"n": self.num_entities},
+            "extract": {"id_bits": cfg.id_bits},
+            "block": asdict(cfg.blocking),
+            "score": asdict(cfg.matching),
+            "cluster": asdict(cfg.clustering),
+        }[stage]
+
+    def _fingerprint(self, stage: str) -> str:
+        """Digest of ``stage``'s knobs and its upstream stage's
+        fingerprint (stages run in :data:`STAGES` order)."""
+        i = STAGES.index(stage)
+        blob = json.dumps(
+            {
+                "stage": stage,
+                "knobs": self._stage_knobs(stage),
+                "upstream": self._fingerprint(STAGES[i - 1]) if i else None,
+            },
+            sort_keys=True,
+        )
+        return hashlib.sha256(blob.encode()).hexdigest()[:16]
+
+    # each table: skip when checkpoint exists with its stage's fingerprint
+    def _run_stage(self, stage: str, table: str, build, force: bool = False) -> DataFrame:
+        fp = self._fingerprint(stage)
+        if not force and self.catalog.exists(table, fp):
+            return self.catalog.read(table)
+        return self.catalog.write(table, build(), fingerprint=fp)
 
     def synth(self, force: bool = False) -> DataFrame:
         return self._run_stage(
-            "pages", lambda: synth_pages(self.spark, self.num_entities), force
+            "synth", "pages", lambda: synth_pages(self.spark, self.num_entities), force
         )
 
     def extract(self, force: bool = False) -> DataFrame:
@@ -70,7 +92,7 @@ class ERPipeline:
                 self.catalog.read("pages"), id_bits=self.cfg.id_bits
             )
 
-        out = self._run_stage("extracted", build, force)
+        out = self._run_stage("extract", "extracted", build, force)
         # rid is a digest of url; a collision would silently merge two
         # records downstream, so fail loudly here (one cheap agg over
         # the checkpoint — see extract.rid_collision_count).
@@ -93,40 +115,37 @@ class ERPipeline:
                 ext, self.cfg.blocking, id_col="rid", text_col="combined"
             )
 
-        self._run_stage("postings", postings, force)
+        self._run_stage("block", "postings", postings, force)
 
         def build():
             return pairs_from_postings(
                 self.catalog.read("postings"), self.cfg.blocking
             )
 
-        pairs = self._run_stage("pairs", build, force)
+        pairs = self._run_stage("block", "pairs", build, force)
 
         # skew metrics alongside the checkpoint (north-rule observability)
         def stats():
             return block_stats(self.catalog.read("postings"))
 
-        self._run_stage("block_stats", stats, force)
+        self._run_stage("block", "block_stats", stats, force)
         return pairs
 
     def score(self, force: bool = False) -> DataFrame:
         def build():
             ext = self.catalog.read("extracted")
             pairs = self.catalog.read("pairs")
-            return matched_pairs(
-                score_pairs(pairs, ext, self.cfg.matching, id_col="rid"),
-                self.cfg.matching,
-            )
+            return matched_pairs(pairs, ext, self.cfg.matching, id_col="rid")
 
-        return self._run_stage("matched", build, force)
+        return self._run_stage("score", "matched", build, force)
 
     def cluster(self, force: bool = False) -> DataFrame:
         def build():
             ext = self.catalog.read("extracted")
             matched = self.catalog.read("matched")
-            return assign_clusters(ext, matched, id_col="rid")
+            return assign_clusters(ext, matched, id_col="rid", cfg=self.cfg.clustering)
 
-        clustered = self._run_stage("clustered", build, force)
+        clustered = self._run_stage("cluster", "clustered", build, force)
 
         def reps():
             # url-keyed labels: representative stays the human-readable
@@ -136,7 +155,7 @@ class ERPipeline:
             )
             return cluster_representatives(labels, self.cfg.clustering)
 
-        self._run_stage("representatives", reps, force)
+        self._run_stage("cluster", "representatives", reps, force)
         return clustered
 
     def evaluate(self) -> PairMetrics:

@@ -36,7 +36,7 @@ from entity_resolution_pipeline_spark.config import BlockingConfig
 from entity_resolution_pipeline_spark.sources.synth import synth_pages, labeled_pairs
 from entity_resolution_pipeline_spark.operators.extract import extract_fields
 from entity_resolution_pipeline_spark.operators.blocking import capped_postings, pairs_from_postings
-from entity_resolution_pipeline_spark.operators.matching import matched_pairs, score_pairs
+from entity_resolution_pipeline_spark.operators.matching import matched_pairs
 from entity_resolution_pipeline_spark.operators.clustering import connected_components
 from entity_resolution_pipeline_spark.operators.evaluate import pairwise_f1
 
@@ -72,7 +72,7 @@ n_pairs = pairs.count()
 t_block = time.time() - t0
 
 t0 = time.time()
-matched = matched_pairs(score_pairs(pairs, ext, id_col="rid")).localCheckpoint(eager=True)
+matched = matched_pairs(pairs, ext, id_col="rid").localCheckpoint(eager=True)
 n_matched = matched.count()
 t_score = time.time() - t0
 

@@ -50,6 +50,28 @@ def test_long_path_converges_in_log_rounds(spark):
     assert {r.component_id for r in rows} == {"n00000"}
 
 
+def test_pipeline_cluster_honours_max_rounds(spark, tmp_path):
+    """ERPipeline.cluster runs connected components under the pipeline's
+    ClusteringConfig: one round cannot close a long chain."""
+    from entity_resolution_pipeline_spark.config import PipelineConfig
+    from entity_resolution_pipeline_spark.plans.pipeline import ERPipeline
+    from entity_resolution_pipeline_spark.sources.catalog import TableCatalog
+
+    n = 200
+    cat = TableCatalog(spark, str(tmp_path / "wh"))
+    cat.write(
+        "extracted",
+        spark.range(n).select(
+            F.col("id").alias("rid"), F.format_string("u%05d", "id").alias("url")
+        ),
+    )
+    chain = [(i, i + 1) for i in range(n - 1)]
+    cat.write("matched", spark.createDataFrame(chain, "id1 long, id2 long"))
+    pipe = ERPipeline(spark, cat, PipelineConfig(clustering=ClusteringConfig(max_rounds=1)))
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        pipe.cluster(force=True)
+
+
 def test_assign_clusters_and_dedup(spark):
     records = spark.createDataFrame(
         [("u1", "x"), ("u2", "x"), ("u3", "y"), ("u4", "z")], ["url", "payload"]

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from entity_resolution_pipeline_spark.config import (
     BlockingConfig,
+    ClusteringConfig,
     MatchingConfig,
     PipelineConfig,
 )
@@ -28,32 +29,57 @@ def gold(tiny_pages):
     )
 
 
-@pytest.mark.parametrize("method", ["levenshtein", "jaccard", "trigram", "jaro_winkler"])
-def test_f1_gate_all_matchers(tiny_extracted, gold, method):
-    pairs = candidate_pairs(tiny_extracted, BlockingConfig(scheme="token"), text_col="combined")
+METHODS = ["levenshtein", "jaccard", "trigram", "jaro_winkler"]
+WEIGHT_GRID = [(0.33, 0.33, 0.33), (0.7, 0.3, 0.0), (0.0, 0.7, 0.3)]
+
+
+@pytest.fixture(scope="module")
+def tiny_pairs(tiny_extracted):
+    return candidate_pairs(
+        tiny_extracted, BlockingConfig(scheme="token"), text_col="combined"
+    ).cache()
+
+
+@pytest.mark.parametrize("method", METHODS)
+def test_f1_gate_all_matchers(tiny_extracted, tiny_pairs, gold, method):
     cfg = MatchingConfig(method=method)
-    m = matched_pairs(score_pairs(pairs, tiny_extracted, cfg), cfg)
+    m = matched_pairs(tiny_pairs, tiny_extracted, cfg)
     pm = pairwise_f1(m.select("id1", "id2"), gold)
     assert pm.f1 >= 0.99, (method, pm)
 
 
+@pytest.mark.parametrize("method", METHODS)
+def test_matched_pairs_equals_filtered_scores(tiny_extracted, tiny_pairs, method):
+    """The bound-pruned operator returns exactly the rows of the full
+    score above θ, with bit-equal similarity doubles — over the weight
+    grid plus a vector with a negative weight on the title feature
+    (whose bound then takes the feature at 0.0, not 1.0)."""
+    for weights in [*WEIGHT_GRID, (-0.2, 0.8, 0.4)]:
+        for threshold in (0.5, 0.8):
+            cfg = MatchingConfig(method=method, weights=weights, threshold=threshold)
+            got = sorted(matched_pairs(tiny_pairs, tiny_extracted, cfg).collect())
+            want = sorted(
+                score_pairs(tiny_pairs, tiny_extracted, cfg)
+                .where(F.col("similarity") > threshold)
+                .select("id1", "id2", "similarity")
+                .collect()
+            )
+            assert got, (weights, threshold)
+            assert got == want, (weights, threshold)
+
+
 @pytest.mark.parametrize(
-    "weights",
-    [(0.33, 0.33, 0.33), (0.7, 0.3, 0.0), (0.0, 0.7, 0.3)],
-    ids=["balanced", "title-heavy", "authors-meta"],
+    "weights", WEIGHT_GRID, ids=["balanced", "title-heavy", "authors-meta"]
 )
-def test_f1_gate_weight_grid(tiny_extracted, gold, weights):
+def test_f1_gate_weight_grid(tiny_extracted, tiny_pairs, gold, weights):
     """E3 — the reference's weight-vector grid (evaluate_pipeline.py:37-57)
     at θ=0.8.  The balanced vector must clear the 0.99 gate; skewed
     vectors must clear the reference's own observed grid floor (0.9677
     for by_year+trigram w=[.7,.3,0], result_20240202-215248.csv) — a
     single-attribute-heavy score legitimately misses a few pairs whose
     perturbed variant dropped a title word."""
-    pairs = candidate_pairs(
-        tiny_extracted, BlockingConfig(scheme="token"), text_col="combined"
-    )
     cfg = MatchingConfig(weights=weights)
-    m = matched_pairs(score_pairs(pairs, tiny_extracted, cfg), cfg)
+    m = matched_pairs(tiny_pairs, tiny_extracted, cfg)
     pm = pairwise_f1(m.select("id1", "id2"), gold)
     floor = 0.99 if weights == (0.33, 0.33, 0.33) else 0.9677
     assert pm.f1 >= floor, (weights, pm)
@@ -70,9 +96,8 @@ def test_inspect_pairs_readable(tiny_extracted):
     assert all(r.text1 and r.text2 for r in rows)
 
 
-def test_threshold_sweep_monotone_precision(tiny_extracted, gold):
-    pairs = candidate_pairs(tiny_extracted, BlockingConfig(scheme="token"), text_col="combined")
-    scored = score_pairs(pairs, tiny_extracted, MatchingConfig())
+def test_threshold_sweep_monotone_precision(tiny_extracted, tiny_pairs, gold):
+    scored = score_pairs(tiny_pairs, tiny_extracted, MatchingConfig())
     sweep = threshold_sweep(scored, gold, thresholds=(0.5, 0.8, 0.95))
     precisions = [m.precision for _, m in sweep]
     assert precisions == sorted(precisions)
@@ -102,6 +127,44 @@ def test_pipeline_resume(spark, tmp_path):
     assert cat.exists("matched")
     pm2 = pipe.evaluate()
     assert pm2 == pm1
+
+
+def test_stage_fingerprints_scope_reruns(spark, tmp_path):
+    """A knob change re-runs the stage that reads it and the stages
+    after it, never the ones before."""
+    cat = TableCatalog(spark, str(tmp_path / "wh_fp"))
+    written = []
+    write = cat.write
+
+    def spy(name, df, **kw):
+        written.append(name)
+        return write(name, df, **kw)
+
+    cat.write = spy
+    ERPipeline(spark, cat, PipelineConfig(), num_entities=40).run()
+
+    written.clear()
+    ERPipeline(
+        spark,
+        cat,
+        PipelineConfig(clustering=ClusteringConfig(min_cluster_size=3)),
+        num_entities=40,
+    ).run()
+    assert written == ["clustered", "representatives"]
+
+    written.clear()
+    ERPipeline(
+        spark,
+        cat,
+        PipelineConfig(
+            blocking=BlockingConfig(max_block_size=500),
+            clustering=ClusteringConfig(min_cluster_size=3),
+        ),
+        num_entities=40,
+    ).run()
+    assert written == [
+        "postings", "pairs", "block_stats", "matched", "clustered", "representatives"
+    ]
 
 
 def test_cluster_count_matches_planted(spark, tmp_path):
