@@ -47,15 +47,6 @@ class BlockingConfig:
     min_block_size: int = 2  # reference: len > 1 (utils.py:100)
     max_block_size: int = 1000  # reference: len < 1000 (utils.py:100)
     salt_buckets: int = 16  # salting fan-out for keys near the cap
-    sn_window: int = 5  # sorted-neighborhood window width
-    # Pair-generation physical strategy (same pair set either way):
-    #   join    — two-sided self-equi-join on key (+ salting); postings
-    #             shuffle twice, valid-key set broadcasts for the cap
-    #   grouped — one groupBy(key) with cap-bounded collect_list after
-    #             broadcasting only the tiny over-cap key set; postings
-    #             shuffle once (the 10^12-doc shape — a billion-key
-    #             valid set cannot broadcast)
-    pair_strategy: str = "join"
     # Replace string blocking keys with xxhash64(key) in the posting
     # list at a fraction of the shuffle bytes.  A 64-bit collision that
     # merges two keys can add pairs (scoring rejects them) or, because

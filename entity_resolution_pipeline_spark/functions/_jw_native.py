@@ -1,16 +1,17 @@
 """Optional native Jaro-Winkler batch kernel.
 
 The Arrow-batched UDF boundary hands us whole columns; the per-pair
-kernel is a tight char loop that Python/numpy cannot express
-efficiently (measured: scalar Python ~20k pairs/s, bit-parallel numpy
-~2.5x that — the numpy op overhead per batch column is the floor).  A
+kernel is a tight char loop that Python cannot express efficiently.  A
 ~60-line C translation of the SAME algorithm (functions/similarity.py
-``jaro_winkler_py``, the parity oracle) runs >1M pairs/s.
+``jaro_winkler_py``, the parity oracle) scores 10k pairs of 30-60
+characters at 166-269k pairs/s against the scalar oracle's 9.9-11.4k
+pairs/s (one core of a 4-core Xeon VM, two string sets).
 
 The kernel compiles lazily with the system C compiler into a cache
 directory and loads via ctypes; any failure (no compiler, readonly FS)
-falls back to the numpy path — behavior is identical either way
-(property-tested in tests/test_functions.py).
+makes :func:`jw_batch` return None and the UDF falls back to the
+scalar oracle — behavior is identical either way (property-tested in
+tests/test_functions.py).
 """
 
 from __future__ import annotations

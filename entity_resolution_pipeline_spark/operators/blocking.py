@@ -134,11 +134,8 @@ def pairs_from_postings(
     keys: DataFrame, cfg: BlockingConfig | None = None
 ) -> DataFrame:
     """capped postings → canonical candidate pairs ``(id1, id2)``,
-    ``id1 < id2``, deduped.  Physical strategy per
-    ``cfg.pair_strategy`` (join | grouped — identical output)."""
+    ``id1 < id2``, deduped."""
     cfg = cfg or BlockingConfig()
-    if cfg.pair_strategy == "grouped":
-        return pairs_from_postings_grouped(keys, cfg)
     s = cfg.salt_buckets
     if s > 1:
         # Unified salted self-join: cold blocks live at salt 0 only; hot
@@ -175,62 +172,6 @@ def pairs_from_postings(
         a.join(b, on)
         .where(F.col("id1") < F.col("id2"))
         .select("id1", "id2")
-        .dropDuplicates(["id1", "id2"])
-    )
-
-
-def pairs_from_postings_grouped(
-    keys: DataFrame, cfg: BlockingConfig | None = None
-) -> DataFrame:
-    """Candidate pairs via ONE grouped shuffle instead of the two-sided
-    self-join — the same pair set as :func:`pairs_from_postings`.
-
-    Plan: map-side-partial count → ultra-hot keys (count ≥ cap) form a
-    TINY broadcast anti-join set (at web scale the valid-key set is
-    billions of rows and cannot broadcast, but the over-cap set is a
-    handful of boilerplate keys by definition) → one groupBy(key) with
-    a **cap-bounded** collect_list (≤ max_block_size ids — NOT the
-    reference's unbounded collect at distributed_er_pipeline.py:89,
-    which this module's join path was designed to avoid) → in-array
-    pair expansion (slice/transform builtins) → dedup.
-
-    Shuffle accounting vs the join path: postings cross the wire once
-    (not twice), and no full valid-key set is broadcast.  Worst-case
-    per-key fan-out is cap²/2 pairs — bounded, streamed by explode.
-
-    Input ``keys`` may be raw postings from :func:`blocking_keys` (the
-    cap is derived here) or already-capped postings from
-    :func:`filter_blocks`/:func:`capped_postings` (detected via the
-    ``block_count`` column — the count pass is then skipped, the
-    collect_list is already bounded).
-    """
-    cfg = cfg or BlockingConfig()
-    posts = keys.select("id", "key")
-    if "block_count" not in keys.columns:
-        counts = posts.groupBy("key").agg(F.count("*").alias("n"))
-        hot = counts.where(F.col("n") >= cfg.max_block_size).select("key")
-        # AQE picks broadcast when the over-cap set is small (the normal
-        # case); a forced F.broadcast here OOM'd at low caps on large
-        # corpora where the over-cap set itself grows — let the planner
-        # fall back to a shuffled anti-join in that regime
-        posts = posts.join(hot, "key", "left_anti")
-    grouped = (
-        posts.groupBy("key")
-        .agg(F.array_sort(F.collect_list("id")).alias("ids"))
-        .where(F.size("ids") >= cfg.min_block_size)
-    )
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("id1"), y.alias("id2")),
-            ),
-        )
-    )
-    return (
-        grouped.select(F.explode(pair_structs).alias("p"))
-        .select(F.col("p.id1").alias("id1"), F.col("p.id2").alias("id2"))
         .dropDuplicates(["id1", "id2"])
     )
 

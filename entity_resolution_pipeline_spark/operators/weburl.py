@@ -146,6 +146,9 @@ TRACKING_PARAM_RE = r"^(utm_[^=]*|fbclid|gclid|msclkid|ref)(=|$)"
 
 
 def _canon_parts(url: Column) -> dict[str, Column]:
+    """scheme, host, path and the canonical URL of ``url``.  A URL
+    without a ``scheme://`` prefix has no parts to normalize: its
+    canonical form is the URL itself (NULL stays NULL)."""
     scheme = F.lower(F.regexp_extract(url, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
     rest = F.regexp_extract(url, r"^[A-Za-z][A-Za-z0-9+.-]*://(.*)$", 1)
     nofrag = F.split(rest, "#", 2).getItem(0)
@@ -170,16 +173,19 @@ def _canon_parts(url: Column) -> dict[str, Column]:
         )
     )
     canon_q = F.array_join(params, "&")
-    canon_url = F.concat(
-        scheme,
-        F.lit("://"),
-        host,
-        F.when(keep_port, F.concat(F.lit(":"), port)).otherwise(F.lit("")),
-        path,
-        F.when(canon_q != "", F.concat(F.lit("?"), canon_q)).otherwise(
-            F.lit("")
+    canon_url = F.when(
+        scheme != "",
+        F.concat(
+            scheme,
+            F.lit("://"),
+            host,
+            F.when(keep_port, F.concat(F.lit(":"), port)).otherwise(F.lit("")),
+            path,
+            F.when(canon_q != "", F.concat(F.lit("?"), canon_q)).otherwise(
+                F.lit("")
+            ),
         ),
-    )
+    ).otherwise(url)
     return {"scheme": scheme, "host": host, "path": path, "canon": canon_url}
 
 
@@ -355,37 +361,42 @@ def latest_capture(
     (fully deterministic).  → (canon_url, id, ts, n_captures).
 
     Plan: canonicalization is map-side; then two partial-aggregable
-    groupBys and one equi-join on (canon_url, ts) — no window sort, no
-    per-key collection, so a URL captured 10⁶ times (a hot homepage
-    across crawl snapshots) partial-aggregates map-side and splits
-    under AQE.
+    groupBys and one equi-join on (canon_url, solo, ts) — no window
+    sort, no per-key collection, so a URL captured 10⁶ times (a hot
+    homepage across crawl snapshots) partial-aggregates map-side and
+    splits under AQE.
 
     NULL timestamps are the oldest: a NULL-ts capture loses to any
     known-ts capture, and a canonical URL whose captures are ALL
     NULL-ts still yields a row (ts NULL, max id) — the (canon_url, ts)
     join is null-safe, so no URL silently disappears (ADVICE r4).
+
+    A capture with a NULL URL cannot be a re-crawl of another capture:
+    each one is its own group (keyed by its id under ``solo``) and comes
+    back as its own row with ``n_captures = 1``.
     """
     parts = _canon_parts(F.col(url_col))
     c = df.select(
         parts["canon"].alias("canon_url"),
         F.col(ts_col).alias("ts"),
         F.col(id_col).alias("id"),
-    )
-    m = c.groupBy("canon_url").agg(
+    ).withColumn("solo", F.when(F.col("canon_url").isNull(), F.col("id")))
+    m = c.groupBy("canon_url", "solo").agg(
         F.max("ts").alias("ts"), F.count("*").alias("n_captures")
     )
     return (
         c.join(
             m.select(
                 F.col("canon_url").alias("_m_url"),
+                F.col("solo").alias("_m_solo"),
                 F.col("ts").alias("_m_ts"),
                 "n_captures",
             ),
-            (F.col("canon_url") == F.col("_m_url"))
+            F.col("canon_url").eqNullSafe(F.col("_m_url"))
+            & F.col("solo").eqNullSafe(F.col("_m_solo"))
             & F.col("ts").eqNullSafe(F.col("_m_ts")),
         )
-        .drop("_m_url", "_m_ts")
-        .groupBy("canon_url", "ts", "n_captures")
+        .groupBy("canon_url", "solo", "ts", "n_captures")
         .agg(F.max("id").alias("id"))
         .select(
             "canon_url",

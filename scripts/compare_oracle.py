@@ -35,7 +35,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 
 def main() -> int:
     only = set(sys.argv[1:])
-    spark = get_spark("oracle-compare", master="local[8]", shuffle_partitions=16)
+    spark = get_spark("oracle-compare")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:

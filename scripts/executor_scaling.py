@@ -96,7 +96,7 @@ def one(entities: int, cores: int):
     for attempt in (1, 2):
         try:
             t0 = time.time()
-            r = sb._run_once(cores, entities, 64, "join")
+            r = sb._run_once(cores, entities, 64)
             return time.time() - t0, r["total"], r["pages"]
         except RuntimeError:
             if attempt == 2:

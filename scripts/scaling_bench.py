@@ -54,7 +54,7 @@ spark = get_spark(
     }},
 )
 spark.sparkContext.setLogLevel("ERROR")
-cfg = BlockingConfig(scheme="ngram_word", ngram_n=3, max_block_size={cap}, pair_strategy={strategy!r})
+cfg = BlockingConfig(scheme="ngram_word", ngram_n=3, max_block_size={cap})
 
 # input materialized outside the timed region
 pages = synth_pages(spark, {entities}, partitions=2 * cpus).localCheckpoint(eager=True)
@@ -97,8 +97,8 @@ print("RESULT " + json.dumps({{
 """
 
 
-def _run_once(cpus: int, entities: int, cap: int, strategy: str = "join") -> dict:
-    code = WORKLOAD.format(repo=str(REPO), cpus=cpus, entities=entities, cap=cap, strategy=strategy)
+def _run_once(cpus: int, entities: int, cap: int) -> dict:
+    code = WORKLOAD.format(repo=str(REPO), cpus=cpus, entities=entities, cap=cap)
     out = subprocess.run(
         [sys.executable, "-c", code],
         capture_output=True,
@@ -112,11 +112,11 @@ def _run_once(cpus: int, entities: int, cap: int, strategy: str = "join") -> dic
     raise RuntimeError(f"no RESULT line (rc={out.returncode}):\n{out.stderr[-2000:]}")
 
 
-def run_level(cpus: int, entities: int, cap: int = 64, repeats: int = 1, strategy: str = "join") -> dict:
+def run_level(cpus: int, entities: int, cap: int = 64, repeats: int = 1) -> dict:
     """min-of-k wall times per level: single-box runs at high thread
     counts show +-30% GC/contention noise; min is the standard estimator
     of the noise-free cost."""
-    runs = [_run_once(cpus, entities, cap, strategy) for _ in range(repeats)]
+    runs = [_run_once(cpus, entities, cap) for _ in range(repeats)]
     best = min(runs, key=lambda r: r["total"])
     best["repeats"] = repeats
     return best
@@ -128,11 +128,10 @@ def main() -> None:
     ap.add_argument("--n", type=int, default=8)
     ap.add_argument("--cap", type=int, default=64)
     ap.add_argument("--repeats", type=int, default=2)
-    ap.add_argument("--strategy", default="join", choices=("join", "grouped"))
     args = ap.parse_args()
 
-    lo = run_level(args.n, args.entities, args.cap, args.repeats, args.strategy)
-    hi = run_level(4 * args.n, args.entities, args.cap, args.repeats, args.strategy)
+    lo = run_level(args.n, args.entities, args.cap, args.repeats)
+    hi = run_level(4 * args.n, args.entities, args.cap, args.repeats)
     speedup = lo["total"] / hi["total"]
     efficiency = speedup / 4.0
     result = {

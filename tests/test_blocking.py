@@ -90,32 +90,3 @@ def test_sorted_neighborhood_scheme(spark):
     pairs = {(r.id1, r.id2) for r in candidate_pairs(df, cfg).collect()}
     # identical token signatures land in one neighborhood
     assert ("u1", "u2") in pairs
-
-
-def test_pair_strategies_identical_output(tiny_extracted):
-    """join and grouped pair strategies produce the same canonical pair
-    set, from both raw and pre-capped postings."""
-    from entity_resolution_pipeline_spark.config import BlockingConfig
-    from entity_resolution_pipeline_spark.operators.blocking import (
-        blocking_keys,
-        capped_postings,
-        pairs_from_postings,
-        pairs_from_postings_grouped,
-    )
-
-    cfg_join = BlockingConfig(scheme="ngram_word", ngram_n=3)
-    cfg_grp = BlockingConfig(scheme="ngram_word", ngram_n=3, pair_strategy="grouped")
-
-    capped = capped_postings(tiny_extracted, cfg_join, id_col="rid", text_col="combined")
-    via_join = {
-        (r.id1, r.id2) for r in pairs_from_postings(capped, cfg_join).collect()
-    }
-    via_grouped_capped = {
-        (r.id1, r.id2) for r in pairs_from_postings(capped, cfg_grp).collect()
-    }
-    raw = blocking_keys(tiny_extracted, cfg_grp, id_col="rid", text_col="combined")
-    via_grouped_raw = {
-        (r.id1, r.id2) for r in pairs_from_postings_grouped(raw, cfg_grp).collect()
-    }
-    assert via_join == via_grouped_capped == via_grouped_raw
-    assert via_join  # non-empty

@@ -193,3 +193,48 @@ def test_latest_capture_null_ts(spark):
     assert (r.doc_id, r.ts, r.n_captures) == (1, 5, 2)
     r = got["http://allnull.com/b"]
     assert (r.doc_id, r.ts, r.n_captures) == (3, None, 2)
+
+
+def test_latest_capture_null_url(spark):
+    """A capture with a NULL URL is nobody's re-crawl: each one comes
+    back as its own row with n_captures = 1."""
+    from entity_resolution_pipeline_spark.operators.weburl import (
+        latest_capture,
+    )
+
+    df = spark.createDataFrame(
+        [
+            (1, None, 5),
+            (2, None, 9),
+            (3, "http://site.com/a", 1),
+            (4, "http://site.com/a", 2),
+        ],
+        "doc_id long, url string, ts long",
+    )
+    got = [
+        (r.canon_url, r.doc_id, r.ts, r.n_captures)
+        for r in latest_capture(df).collect()
+    ]
+    assert len(got) == 3
+    assert set(got) == {(None, 1, 5, 1), (None, 2, 9, 1), ("http://site.com/a", 4, 2, 2)}
+
+
+def test_scheme_less_urls_keep_raw_canon(spark):
+    """Without a scheme:// prefix the raw URL is its own canonical key,
+    so two different scheme-less URLs are not merged."""
+    from entity_resolution_pipeline_spark.operators.weburl import (
+        latest_capture,
+    )
+
+    got = _canon(spark, ["example.com/a?b=1", "/relative/path"])
+    assert got[0].canon_url == "example.com/a?b=1"
+    assert got[1].canon_url == "/relative/path"
+
+    df = spark.createDataFrame(
+        [(1, "example.com/a", 1), (2, "other.org/b", 2), (3, "example.com/a", 3)],
+        "doc_id long, url string, ts long",
+    )
+    got = {r.canon_url: r for r in latest_capture(df).collect()}
+    assert set(got) == {"example.com/a", "other.org/b"}
+    assert (got["example.com/a"].doc_id, got["example.com/a"].n_captures) == (3, 2)
+    assert (got["other.org/b"].doc_id, got["other.org/b"].n_captures) == (2, 1)
