@@ -62,6 +62,7 @@ from entity_resolution_pipeline_spark.operators.dedup import (
     simhash16,
     simhash_near_duplicates,
 )
+from entity_resolution_pipeline_spark.operators.evaluate import pairwise_f1
 from entity_resolution_pipeline_spark.operators.matching import (
     join_pair_records,
     matched_pairs,
@@ -475,18 +476,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["connected_components"] = _spark_components
 
     # -- C5/C7: cluster representatives -----------------------------------
-    def reps(spark, sf):
-        labels = _spark_components(spark, sf)
-        return (
-            labels.groupBy("component_id")
-            .agg(
-                F.min("id").alias("representative"),
-                F.count("*").alias("cluster_size"),
-            )
-            .where(F.col("cluster_size") >= 2)
-        )
-
-    q["cluster_representatives"] = reps
+    q["cluster_representatives"] = lambda spark, sf: cluster_representatives(
+        _spark_components(spark, sf)
+    )
 
     # -- E1: pairwise precision/recall/F1 ---------------------------------
     def f1_eval(spark, sf):
@@ -498,13 +490,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .where(jaccard_sim(F.col("text_norm_1"), F.col("text_norm_2")) >= 0.5)
             .select("id1", "id2")
         )
-        tp = pred.join(gold, ["id1", "id2"]).count()
-        n_pred, n_gold = pred.count(), gold.count()
-        precision = tp / n_pred if n_pred else 0.0
-        recall = tp / n_gold if n_gold else 0.0
-        f1 = 2 * precision * recall / (precision + recall) if precision + recall else 0.0
+        m = pairwise_f1(pred, gold)
+        rates = (round(m.precision, 6), round(m.recall, 6), round(m.f1, 6))
         return spark.createDataFrame(
-            [(tp, n_pred, n_gold, round(precision, 6), round(recall, 6), round(f1, 6))],
+            [(m.tp, m.tp + m.fp, m.tp + m.fn, *rates)],
             "tp long, n_pred long, n_gold long, precision double, recall double, f1 double",
         )
 
@@ -807,17 +796,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["exact_k_sample"] = exact_k
 
-    # the REGISTERED path is long_docs=True — the explode→groupBy shape
-    # that stays linear in token mass at 100 TB; the interpreted-HOF
-    # default path computes identical values and is pinned to it by the
-    # equality pytest (tests/test_corpus.py), so one driver row covers
-    # both twins
     def rep_stats(spark, sf):
         from entity_resolution_pipeline_spark.operators.corpus import (
             repetition_stats,
         )
 
-        return repetition_stats(_raw_docs(spark, sf), long_docs=True)
+        return repetition_stats(_raw_docs(spark, sf))
 
     q["repetition_stats"] = rep_stats
 
@@ -826,7 +810,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             c4_quality_gate,
         )
 
-        return c4_quality_gate(_raw_docs(spark, sf), long_docs=True)
+        return c4_quality_gate(_raw_docs(spark, sf))
 
     q["c4_gate"] = c4_gate
 

@@ -95,9 +95,6 @@ _MIN_LOOP_PARTITIONS = 8
 #: LOSES — the overshoot past the fixpoint costs more than the saved
 #: checkpoint/signature jobs (8 cores: 15.0 s vs 8.2 s single-round).
 _ROUNDS_PER_CHECKPOINT = 1
-#: Size the loop's shuffle width to the frontier.  Same measurement:
-#: single-round sized = 4.5 s @8 / 5.8 s @32 vs session-width 5.2 / 12.5.
-_SIZE_LOOP_PARTITIONS = True
 
 
 def connected_components(
@@ -133,12 +130,10 @@ def connected_components(
         # spark.sql.shuffle.partitions (ADVICE r2: a concurrent query on
         # the same SparkSession would silently run at the shrunken
         # width mid-loop).
-        parts = None
-        if _SIZE_LOOP_PARTITIONS:
-            parts = max(
-                min(_MIN_LOOP_PARTITIONS, int(default_sp)),
-                min(int(default_sp), -(-sig[0] // _EDGE_ROWS_PER_PARTITION)),
-            )
+        parts = max(
+            min(_MIN_LOOP_PARTITIONS, int(default_sp)),
+            min(int(default_sp), -(-sig[0] // _EDGE_ROWS_PER_PARTITION)),
+        )
         nxt = cur
         for _ in range(_ROUNDS_PER_CHECKPOINT):
             nxt = _small_star(_large_star(nxt, parts), parts)

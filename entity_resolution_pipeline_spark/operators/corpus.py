@@ -18,9 +18,10 @@ around dedup in an LLM-data flow (SURVEY §2.7 extension surface):
 * per-**source stats** (the per-domain aggregates used for crawl
   triage).
 
-All pure Catalyst expressions — no Python in any hot path; every
-operator has a DuckDB-portable twin (md5 is the only hash either side
-uses, per the oracle-portability recipes).
+Pure Catalyst expressions, except the Arrow md5 window kernel of
+:func:`remove_duplicate_spans`; every operator has a DuckDB-portable
+twin (md5 is the only hash either side uses, per the
+oracle-portability recipes).
 """
 
 from __future__ import annotations
@@ -249,50 +250,10 @@ def _tokens(text: Column | str) -> Column:
     return F.array_remove(F.split(F.trim(c), r"\s+"), "")
 
 
-def _long_doc_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Shared explode → groupBy(doc, token) aggregates for the
-    ``long_docs=True`` paths of :func:`repetition_stats` and
-    :func:`c4_quality_gate`: → (id, _n, _n_distinct, _top, _chars,
-    _stop_n), one row per doc that has ≥ 1 token (callers zero-fill via
-    a spine join).
-
-    Why a twin exists (r3 VERDICT): the per-row HOF scans are
-    interpreted — O(distinct × n) for the top-word count and
-    O(n × |stopwords|) for the stopword fraction — fine for page-length
-    web text, quadratic pain on book-length documents.  This shape is
-    two partial-aggregated shuffles, (doc, token) then (doc), linear in
-    corpus token mass; the stopword test is one broadcast hash join
-    against the 113-row stopword table evaluated per DISTINCT
-    (doc, token), not per occurrence.
-    """
-    spark = df.sparkSession
-    stop_df = spark.createDataFrame(
-        [(s,) for s in STOPWORDS], "t string"
-    ).withColumn("_stop", F.lit(1))
-    per_tok = (
-        df.select(
-            F.col(id_col).alias("id"), F.explode(_tokens(text_col)).alias("t")
-        )
-        .groupBy("id", "t")
-        .agg(F.count("*").alias("c"))
-        .join(F.broadcast(stop_df), "t", "left")
-    )
-    return per_tok.groupBy("id").agg(
-        F.sum("c").alias("_n"),
-        F.count("*").alias("_n_distinct"),
-        F.max("c").alias("_top"),
-        F.sum(F.length("t") * F.col("c")).alias("_chars"),
-        F.sum(F.when(F.col("_stop") == 1, F.col("c")).otherwise(0)).alias(
-            "_stop_n"
-        ),
-    )
-
-
 def repetition_stats(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    long_docs: bool = False,
 ) -> DataFrame:
     """Gopher-style repetition signals per document:
 
@@ -300,52 +261,40 @@ def repetition_stats(
     * ``dup_word_frac`` — fraction of token occurrences beyond each
       type's first (1 − distinct/total; Gopher's duplicate-line mass,
       restated over tokens for single-line web text);
-    * ``top_word_frac`` — occurrence share of the most frequent token
-      (ties by the token string, for a total deterministic answer).
+    * ``top_word_frac`` — occurrence share of the most frequent token.
 
-    Default path: pure per-row expressions — no shuffle.  Spark
-    evaluates higher-order functions interpreted (not codegen), so the
-    O(distinct × n) top-word scan is sized for web-page-length token
-    streams; ``long_docs=True`` switches to the explode →
-    groupBy(doc, token) shape (:func:`_long_doc_stats`) — two shuffles
-    but linear in token mass, the right plan for book-length documents.
-    Both paths return identical values (equality-tested).
+    Plan: explode → groupBy(doc, token) → groupBy(doc), two
+    partial-aggregated shuffles linear in corpus token mass, then a left
+    join onto the id spine so token-less docs report zeros; ``id_col``
+    must therefore be a non-null unique key.  A per-row
+    top-word scan (``transform`` over ``array_distinct``) is
+    O(distinct × n) interpreted work per doc: 156 s vs 0.6 s for this
+    shape on 64 × 20k-token docs (docs/PLANS.md).
     """
-    if long_docs:
-        s = _long_doc_stats(df, id_col, text_col)
-        spine = df.select(F.col(id_col).alias("id"))
-        n = F.coalesce(F.col("_n"), F.lit(0))
-        return spine.join(s, "id", "left").select(
-            F.col("id").alias(id_col),
-            n.cast("long").alias("n_words"),
-            F.round(
-                F.when(n > 0, 1.0 - F.col("_n_distinct") / n).otherwise(
-                    F.lit(0.0)
-                ),
-                6,
-            ).alias("dup_word_frac"),
-            F.round(
-                F.when(n > 0, F.col("_top") / n).otherwise(F.lit(0.0)), 6
-            ).alias("top_word_frac"),
+    per_doc = (
+        df.select(
+            F.col(id_col).alias("id"), F.explode(_tokens(text_col)).alias("t")
         )
-    toks = _tokens(text_col)
-    n = F.size(toks)
-    n_distinct = F.size(F.array_distinct(toks))
-    # most-frequent token count: per distinct token, count occurrences
-    top = F.array_max(
-        F.transform(
-            F.array_distinct(toks),
-            lambda d: F.size(F.filter(toks, lambda t: t == d)),
+        .groupBy("id", "t")
+        .agg(F.count("*").alias("c"))
+        .groupBy("id")
+        .agg(
+            F.sum("c").alias("_n"),
+            F.count("*").alias("_n_distinct"),
+            F.max("c").alias("_top"),
         )
     )
-    return df.select(
-        F.col(id_col),
+    spine = df.select(F.col(id_col).alias("id"))
+    n = F.coalesce(F.col("_n"), F.lit(0))
+    return spine.join(per_doc, "id", "left").select(
+        F.col("id").alias(id_col),
         n.cast("long").alias("n_words"),
         F.round(
-            F.when(n > 0, 1.0 - n_distinct / n).otherwise(F.lit(0.0)), 6
+            F.when(n > 0, 1.0 - F.col("_n_distinct") / n).otherwise(F.lit(0.0)),
+            6,
         ).alias("dup_word_frac"),
         F.round(
-            F.when(n > 0, top / n).otherwise(F.lit(0.0)), 6
+            F.when(n > 0, F.col("_top") / n).otherwise(F.lit(0.0)), 6
         ).alias("top_word_frac"),
     )
 
@@ -360,36 +309,10 @@ C4_MEAN_WORD_LEN = (3.0, 10.0)
 C4_MIN_STOPWORD_FRAC = 0.05
 
 
-def _gate_project(
-    frame: DataFrame, id_out: Column, n_chars: Column, n_words: Column,
-    mwl: Column, stop_frac: Column,
-) -> DataFrame:
-    """Shared rule projection of :func:`c4_quality_gate` — both the
-    per-row HOF path and the long-doc explode path feed it the same
-    four measures, so the rule logic cannot drift between them."""
-    len_ok = (n_chars >= C4_MIN_CHARS) & (n_chars <= C4_MAX_CHARS)
-    words_ok = n_words >= C4_MIN_WORDS
-    mwl_ok = (mwl >= C4_MEAN_WORD_LEN[0]) & (mwl <= C4_MEAN_WORD_LEN[1])
-    stop_ok = stop_frac >= C4_MIN_STOPWORD_FRAC
-    return frame.select(
-        id_out,
-        n_chars.cast("long").alias("n_chars_text"),
-        n_words.cast("long").alias("n_words"),
-        F.round(mwl, 6).alias("mean_word_len"),
-        F.round(stop_frac, 6).alias("stopword_frac"),
-        len_ok.alias("len_ok"),
-        words_ok.alias("words_ok"),
-        mwl_ok.alias("mwl_ok"),
-        stop_ok.alias("stop_ok"),
-        (len_ok & words_ok & mwl_ok & stop_ok).alias("keep"),
-    )
-
-
 def c4_quality_gate(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    long_docs: bool = False,
 ) -> DataFrame:
     """C4-style keep/drop with per-rule booleans:
 
@@ -400,44 +323,38 @@ def c4_quality_gate(
     auditable at corpus scale — each rule's kill-rate is one groupBy
     away.
 
-    Default path is per-row HOF expressions (no shuffle) whose stopword
-    scan is O(n × |stopwords|) per row — sized for page-length web
-    text; ``long_docs=True`` switches to the explode → groupBy shape of
-    :func:`_long_doc_stats` (linear in token mass, broadcast stopword
-    join).  Both paths return identical values (equality-tested).
+    Plan: zero-shuffle per-row projection, linear in tokens.  The
+    stopword test is ``isin`` over the literal list, which Catalyst
+    rewrites to a hash-set ``INSET`` — an O(1) probe per token, unlike
+    ``array_contains`` over a literal array (O(|stopwords|) per token).
     """
-    if long_docs:
-        s = _long_doc_stats(df, id_col, text_col)
-        spine = df.select(
-            F.col(id_col).alias("id"), F.length(text_col).alias("_nc")
-        )
-        j = spine.join(s, "id", "left")
-        n_words = F.coalesce(F.col("_n"), F.lit(0))
-        mwl = F.when(n_words > 0, F.col("_chars") / n_words).otherwise(
-            F.lit(0.0)
-        )
-        stop_frac = F.when(
-            n_words > 0, F.coalesce(F.col("_stop_n"), F.lit(0)) / n_words
-        ).otherwise(F.lit(0.0))
-        return _gate_project(
-            j, F.col("id").alias(id_col), F.col("_nc"), n_words, mwl, stop_frac
-        )
     toks = _tokens(text_col)
     n_chars = F.length(text_col)
     n_words = F.size(toks)
     mwl = F.when(
         n_words > 0,
-        F.aggregate(
-            toks, F.lit(0.0), lambda acc, t: acc + F.length(t)
-        )
-        / n_words,
+        F.aggregate(toks, F.lit(0.0), lambda acc, t: acc + F.length(t)) / n_words,
     ).otherwise(F.lit(0.0))
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     stop_frac = F.when(
         n_words > 0,
-        F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t))) / n_words,
+        F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS))) / n_words,
     ).otherwise(F.lit(0.0))
-    return _gate_project(df, F.col(id_col), n_chars, n_words, mwl, stop_frac)
+    len_ok = (n_chars >= C4_MIN_CHARS) & (n_chars <= C4_MAX_CHARS)
+    words_ok = n_words >= C4_MIN_WORDS
+    mwl_ok = (mwl >= C4_MEAN_WORD_LEN[0]) & (mwl <= C4_MEAN_WORD_LEN[1])
+    stop_ok = stop_frac >= C4_MIN_STOPWORD_FRAC
+    return df.select(
+        F.col(id_col),
+        n_chars.cast("long").alias("n_chars_text"),
+        n_words.cast("long").alias("n_words"),
+        F.round(mwl, 6).alias("mean_word_len"),
+        F.round(stop_frac, 6).alias("stopword_frac"),
+        len_ok.alias("len_ok"),
+        words_ok.alias("words_ok"),
+        mwl_ok.alias("mwl_ok"),
+        stop_ok.alias("stop_ok"),
+        (len_ok & words_ok & mwl_ok & stop_ok).alias("keep"),
+    )
 
 
 def c4_line_filter(
@@ -461,8 +378,7 @@ def c4_line_filter(
     Plan: zero-shuffle projection.  The line rules are array HOFs over
     the ``\\n``-split — interpreted, but O(lines + chars) per row with
     tiny constants (a regexp tail-anchor, a word count, a substring
-    test per line), unlike the O(distinct×n) gate HOFs that needed a
-    ``long_docs`` twin.
+    test per line).
     """
     lines = F.split(F.col(text_col), "\n")
     nonempty = F.filter(lines, lambda l: F.trim(l) != "")
@@ -855,15 +771,13 @@ def source_stats(
 def _window_md5_udf(k: int):
     """Arrow-batched window-digest kernel: per document, the md5 hex
     digest of every ``k``-token shingle (single-space-joined) — the
-    SAME values as the interpreted-HOF twin inside
-    :func:`remove_duplicate_spans`, so the two paths (and the DuckDB
-    oracle) agree digest-for-digest.
+    value the DuckDB oracle computes as ``md5(array_to_string(...))``.
 
     The document's tokens are joined to ONE utf-8 buffer and each
     window is a zero-copy memoryview slice fed to C md5 — O(k·n) bytes
-    hashed at memcpy speed, versus the HOF evaluator's per-window
-    interpreted concat+md5 expression tree (r4 verdict: ~k× the char
-    mass of interpreted work per row)."""
+    hashed at memcpy speed, versus Spark's interpreted evaluator running
+    a per-window concat+md5 expression tree (~k× the char mass of
+    interpreted work per row)."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("array<string>")
@@ -901,7 +815,6 @@ def remove_duplicate_spans(
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 50,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Exact duplicate-span REMOVAL (Lee et al. 2022 §4's
     dedup-and-train form, at token-shingle granularity): any token
@@ -928,34 +841,18 @@ def remove_duplicate_spans(
     key frequency — same shape as ``contamination_spans``); rebuild
     collects doc-bounded structs.
 
-    ``impl`` picks the digest kernel — ``"arrow"`` (default): the
-    Arrow-batched zero-copy-slice md5 kernel (C-speed hashing, the
-    scale path); ``"hof"``: the pure-Catalyst array-transform twin
-    (interpreted evaluator — k× the document's char mass of
-    interpreted work per row, kept as the builtin-only reference
-    implementation).  Both produce identical digests and therefore
-    identical output (equality-pytested).
+    The digest kernel is :func:`_window_md5_udf`.  An interpreted
+    ``transform(sequence(...), md5(concat_ws(slice)))`` digest was
+    slower on every input but ≤ 100-token docs at k = 5 (docs/PLANS.md).
     """
     from pyspark.sql import Window
-
-    if impl not in ("arrow", "hof"):
-        raise ValueError(f"impl must be 'arrow' or 'hof', got {impl!r}")
 
     toks_col = F.filter(
         F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != ""
     )
     base = df.select(F.col(id_col).alias("id"), toks_col.alias("toks"))
     tok = base.select("id", F.posexplode("toks").alias("pos", "tok"))
-    if impl == "arrow":
-        grams = _window_md5_udf(k)(F.col("toks"))
-    else:
-        grams = F.when(
-            F.size("toks") >= k,
-            F.transform(
-                F.sequence(F.lit(1), F.size("toks") - (k - 1)),
-                lambda i: F.md5(F.concat_ws(" ", F.slice("toks", i, k))),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
+    grams = _window_md5_udf(k)(F.col("toks"))
     occ = base.select("id", F.posexplode(grams).alias("pos", "h"))
     winners = occ.groupBy("h").agg(F.min(F.struct("id", "pos")).alias("_w"))
     dups = (

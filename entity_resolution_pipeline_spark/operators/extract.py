@@ -10,13 +10,11 @@ The reference's analog is its line-prefix corpus parser + normalization
 * ``title_norm``   — normalized <h1>/<title> content
 * ``authors_norm`` — normalized byline content
 
-Two interchangeable implementations, tested byte-identical:
-
-* :func:`extract_text_expr` — pure Catalyst ``regexp_replace`` chain
-  (whole-stage codegen; preferred at scale for the fixed entity set)
-* :func:`extract_text_udf` — Arrow-batched pandas UDF using vectorized
-  ``pandas.Series.str`` ops (the north-rule-named path; extensible to
-  real HTML parsing libs on a production image)
+Body text comes from :func:`extract_text_udf`, an Arrow-batched pandas
+UDF using vectorized ``pandas.Series.str`` ops (the north-rule-named
+path; extensible to real HTML parsing libs on a production image).
+:func:`extract_text_expr` is the builtin-only ``regexp_replace``
+reference it is tested byte-identical against.
 
 No per-row Python anywhere: the UDF body is pandas-vectorized.
 """
@@ -99,15 +97,12 @@ def rid_expr(col: Column | str, id_bits: int = 64) -> Column:
     raise ValueError(f"id_bits must be 64 or 128, got {id_bits}")
 
 
-def extract_fields(
-    pages: DataFrame, use_udf: bool = True, id_bits: int = 64
-) -> DataFrame:
+def extract_fields(pages: DataFrame, id_bits: int = 64) -> DataFrame:
     """pages(url, warc_ts, html, text, lang[, entity_id]) →
     extracted(url, warc_ts, lang, text, title_norm, authors_norm).
 
     Field extraction (title/byline) is builtin ``regexp_extract`` on the
-    decoded HTML; body text via the Arrow UDF (default) or the builtin
-    expression twin.
+    decoded HTML; body text via the Arrow UDF.
 
     ``id_bits=128`` swaps the 8-byte rid for a two-seed xxhash64 struct
     (16-byte shuffle keys, collision probability ~n²/2^129 — zero at
@@ -122,7 +117,6 @@ def extract_fields(
         F.regexp_extract(doc, r"(?is)<title[^>]*>(.*?)</title>", 1),
     )
     byline_raw = F.regexp_extract(doc, r'(?is)<p class="byline"[^>]*>(.*?)</p>', 1)
-    text_col = extract_text_udf(F.col("html")) if use_udf else extract_text_expr("html")
 
     keep = [c for c in ("url", "warc_ts", "lang", "entity_id") if c in pages.columns]
     out = pages.select(
@@ -135,7 +129,7 @@ def extract_fields(
         # rid_collision_count after every extract and hard-fails on a
         # hit (the signal to pass id_bits=128 for that corpus).
         rid_expr("url", id_bits).alias("rid"),
-        text_col.alias("text"),
+        extract_text_udf(F.col("html")).alias("text"),
         normalize_text(title_raw).alias("title_norm"),
         normalize_text(byline_raw).alias("authors_norm"),
     )

@@ -7,12 +7,18 @@ configured ``spark.sql.catalog.*``); this sandbox has no Iceberg runtime
 jar, so the same contract is implemented over a parquet warehouse
 directory with an explicit ``_SUCCESS``-gated snapshot protocol:
 
-* ``write(name, df)``   — atomic replace of ``<warehouse>/<name>`` +
-  append a metrics row (rows written, partitions, wall time, input
-  fingerprint) to the ``_metrics`` table;
+* ``write(name, df)``   — replace ``<warehouse>/<name>`` + append a
+  metrics row (rows written, partitions, wall time, input fingerprint)
+  to the ``_metrics`` table;
 * ``read(name)``        — DataFrame over the snapshot;
 * ``exists(name)``      — resume check: a stage re-runs only when its
   output snapshot is absent or its upstream fingerprint changed.
+
+The overwrite is in place, not atomic, so ``write`` first deletes the
+``<name>._meta.json`` sidecar and rewrites it only after Spark's
+``_SUCCESS`` marker lands; ``exists`` requires both.  A write that dies
+midway therefore leaves a table that ``exists`` reports absent, and the
+stage re-runs instead of resuming from partial output.
 
 Swapping to Iceberg is a one-class change (see :class:`IcebergCatalog`).
 """
@@ -46,7 +52,7 @@ class TableCatalog:
     # -- catalog ops ------------------------------------------------------
     def exists(self, name: str, fingerprint: str | None = None) -> bool:
         meta = self._meta_path(name)
-        if not meta.exists():
+        if not (meta.exists() and (self._path(name) / "_SUCCESS").exists()):
             return False
         if fingerprint is None:
             return True
@@ -68,6 +74,7 @@ class TableCatalog:
         live lineage — the resume point)."""
         t0 = time.time()
         path = self._path(name)
+        self._meta_path(name).unlink(missing_ok=True)
         writer = df.write.mode(mode)
         if partition_by:
             writer = writer.partitionBy(*partition_by)

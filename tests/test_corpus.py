@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from entity_resolution_pipeline_spark.config import STOPWORDS
 from entity_resolution_pipeline_spark.operators.corpus import (
     c4_quality_gate,
     exact_k_sample,
@@ -270,32 +271,49 @@ def test_flag_contamination(spark):
     assert not any(r.contaminated for r in strict.values())
 
 
-def test_gate_long_docs_path_equals_hof_path(spark):
-    """The explode→groupBy long-document twins must return EXACTLY the
-    per-row HOF values on mixed-length input (r3 VERDICT Next #4) —
-    including empty, whitespace-only, and repeated-token docs."""
+def test_gate_and_repetition_values_mixed_lengths(spark):
+    """repetition_stats and c4_quality_gate against plain-Python values
+    on mixed-length input: empty, whitespace-only, repeated-token,
+    5k-token (heavy-tailed vocabulary plus stopwords) and mixed-case
+    docs (the stopword test is case-sensitive)."""
+    from collections import Counter
+
     rows = [
         (1, "the quick brown fox jumps over the lazy dog"),
         (2, ""),  # zero tokens
         (3, "   \t  "),  # whitespace-only
         (4, "spam spam spam spam spam"),  # degenerate repetition
-        # book-length: 5k tokens, heavy-tailed vocabulary + stopwords
         (5, " ".join(
             ("the" if i % 7 == 0 else f"w{(i * i) % 997}") for i in range(5000)
         )),
         (6, "a single And Some UPPER case Mix of the usual words here"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-
-    def snap(frame):
-        return sorted(tuple(r) for r in frame.collect())
-
-    assert snap(repetition_stats(df, long_docs=True)) == snap(
-        repetition_stats(df)
-    )
-    assert snap(c4_quality_gate(df, long_docs=True)) == snap(
-        c4_quality_gate(df)
-    )
+    rep = {r.doc_id: r for r in repetition_stats(df).collect()}
+    gate = {r.doc_id: r for r in c4_quality_gate(df).collect()}
+    assert set(rep) == set(gate) == {i for i, _ in rows}
+    stop = set(STOPWORDS)
+    for i, text in rows:
+        toks = text.split()
+        n = len(toks)
+        counts = Counter(toks)
+        frac = (lambda x: x / n) if n else (lambda x: 0.0)
+        assert rep[i].n_words == gate[i].n_words == n, i
+        assert rep[i].dup_word_frac == pytest.approx(
+            frac(n - len(counts)), abs=1e-6
+        ), i
+        assert rep[i].top_word_frac == pytest.approx(
+            frac(max(counts.values(), default=0)), abs=1e-6
+        ), i
+        assert gate[i].stopword_frac == pytest.approx(
+            frac(sum(t in stop for t in toks)), abs=1e-6
+        ), i
+        assert gate[i].mean_word_len == pytest.approx(
+            frac(sum(map(len, toks))), abs=1e-6
+        ), i
+        assert gate[i].n_chars_text == len(text), i
+    assert gate[6].stopword_frac == pytest.approx(4 / 12, abs=1e-6)
+    assert gate[5].keep and gate[6].keep and not gate[1].keep
 
 
 def test_exact_k_sample_auto_prefilter_identical(docs, spark):
@@ -578,12 +596,11 @@ def test_remove_duplicate_spans(spark):
     assert got[6].text == "" and got[6].n_tokens == 0
 
 
-def test_remove_duplicate_spans_arrow_hof_equal(spark):
-    """The Arrow window-digest kernel and the interpreted-HOF twin
-    produce identical output row-for-row (r5: the kernel is the
-    registered scale path; this equality pins it to the builtin-only
-    reference implementation, including multi-byte utf-8 offsets,
-    overlapping self-duplicates and n==k edges)."""
+def test_remove_duplicate_spans_edge_values(spark):
+    """Literal (text, n_tokens, n_removed) per doc for k ∈ {3, 5},
+    covering multi-byte utf-8 offsets in the window kernel, overlapping
+    self-duplicates and the n == k / n < k edges.  Recorded when the
+    Arrow kernel and an interpreted-HOF digest agreed on every row."""
     from entity_resolution_pipeline_spark.operators.corpus import (
         remove_duplicate_spans,
     )
@@ -601,13 +618,18 @@ def test_remove_duplicate_spans_arrow_hof_equal(spark):
         ],
         "doc_id long, text string",
     )
+    expected = {
+        1: ("héllo wörld w0 w1 w2 w3 w4 w5 w6 naïve coöp", 44, 33),
+        2: ("", 40, 40),
+        3: ("tail one two", 43, 40),
+        4: ("exactly three tokens", 3, 0),
+        5: ("short doc", 2, 0),
+        6: ("", 0, 0),
+        7: ("padded whitespace doc x y z", 6, 0),
+    }
     for k in (3, 5):
-        a = {
+        got = {
             r.doc_id: (r.text, r.n_tokens, r.n_removed)
-            for r in remove_duplicate_spans(docs, k=k, impl="arrow").collect()
+            for r in remove_duplicate_spans(docs, k=k).collect()
         }
-        h = {
-            r.doc_id: (r.text, r.n_tokens, r.n_removed)
-            for r in remove_duplicate_spans(docs, k=k, impl="hof").collect()
-        }
-        assert a == h, (k, a, h)
+        assert got == expected, (k, got)

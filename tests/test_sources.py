@@ -5,6 +5,7 @@ metrics sink (S7 analog), and the synthetic generator's determinism
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
@@ -103,6 +104,33 @@ def test_catalog_metrics_and_lineage(spark, tmp_path):
     assert metrics[0]["fingerprint"] == "abc"
     lineage = cat.partition_lineage("pages")
     assert lineage.agg(F.sum("rows")).collect()[0][0] == metrics[0]["rows"]
+
+
+def test_catalog_failed_overwrite_is_not_resumable(spark, tmp_path):
+    """An overwrite that dies midway must not leave the table looking
+    complete under the previous fingerprint: the resume check would
+    otherwise read partial output as a finished stage."""
+    cat = TableCatalog(spark, str(tmp_path / "wh"))
+    cat.write("t", spark.range(10), fingerprint="a")
+    assert cat.exists("t", "a")
+    boom = spark.range(10).select(
+        F.when(F.col("id") == 7, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id"))
+        .alias("id")
+    )
+    with pytest.raises(Exception, match="boom"):
+        cat.write("t", boom, fingerprint="a")
+    assert not cat.exists("t", "a")
+    assert not cat.exists("t")
+
+
+def test_catalog_exists_requires_success_marker(spark, tmp_path):
+    cat = TableCatalog(spark, str(tmp_path / "wh"))
+    cat.write("t", spark.range(10), fingerprint="a")
+    assert cat.exists("t", "a")
+    (tmp_path / "wh" / "t" / "_SUCCESS").unlink()
+    assert not cat.exists("t", "a")
+    assert not cat.exists("t")
 
 
 def test_synth_determinism_and_rates(spark):
