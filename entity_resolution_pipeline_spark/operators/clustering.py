@@ -7,8 +7,10 @@ cliff named in SURVEY §3.2.  Here: **large-star / small-star** label
 propagation (Kiveris et al., "Connected Components in MapReduce and
 Beyond", SoCC'14) as iterative DataFrame hash-joins.  Converges in
 O(log n) rounds; each round is two join+groupBy-min passes over the
-edge set, ``localCheckpoint``-ed to truncate lineage.  The driver never
-holds a single edge.
+edge set, ``localCheckpoint``-ed to truncate lineage.  The loop stops
+as soon as one aggregate query finds the edges in star form (the
+fixpoint), so no round is spent confirming it.  The driver never holds
+a single edge.
 
 Semantics identical to the reference DFS: partition of nodes into
 maximal connected sets; our component id is ``min(member id)`` —
@@ -73,16 +75,33 @@ def _small_star(edges: DataFrame, parts: int | None = None) -> DataFrame:
     return _dedup(lo_edges.unionByName(hi_edges), parts)
 
 
-def _signature(edges: DataFrame) -> tuple[int, int]:
-    # bit_xor, not sum: overflow-free under ANSI mode and order-insensitive.
-    row = edges.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
+def _star_check(edges: DataFrame) -> tuple[int, bool]:
+    """(edge count, star form?) of hi→lo edges in one aggregate query.
+
+    Star form: every ``src`` has exactly one out-edge and no ``dst`` has
+    any.  Each component is then its minimum id (a ``dst``) with every
+    other member pointing straight at it — the large-star/small-star
+    fixpoint, so a star round over it would return the same edges."""
+    nodes = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("src").alias("node"), F.lit(1).alias("out")),
+                F.struct(F.col("dst").alias("node"), F.lit(0).alias("out")),
+            )
+        ).alias("e")
+    ).groupBy(F.col("e.node")).agg(
+        F.sum("e.out").alias("out"), F.count("*").alias("deg")
+    )
+    row = nodes.agg(
+        F.sum("out").alias("n"),
+        F.bool_and(
+            (F.col("out") <= 1) & ((F.col("out") == 0) | (F.col("deg") == 1))
+        ).alias("star"),
     ).collect()[0]
-    return int(row["n"]), int(row["h"])
+    return int(row["n"] or 0), row["star"] is not False
 
 
-#: target edge rows per shuffle partition inside the star fixpoint loop.
+#: target edge rows per shuffle partition inside the star loop.
 #: The loop is task-launch-overhead-bound on small frontiers (session-
 #: default widths measured 10.3 s vs 5-9 s for size-proportional widths
 #: at sf0.1), but fully serializing it (1 partition) gambles on noise —
@@ -90,11 +109,6 @@ def _signature(edges: DataFrame) -> tuple[int, int]:
 #: 8-way parallel, never the full session width on a shrunken frontier.
 _EDGE_ROWS_PER_PARTITION = 250_000
 _MIN_LOOP_PARTITIONS = 8
-#: star rounds applied between checkpoints/convergence signatures.
-#: Measured (within-JVM, 834k-edge frontier, min-of-2): doubling rounds
-#: LOSES — the overshoot past the fixpoint costs more than the saved
-#: checkpoint/signature jobs (8 cores: 15.0 s vs 8.2 s single-round).
-_ROUNDS_PER_CHECKPOINT = 1
 
 
 def connected_components(
@@ -104,55 +118,54 @@ def connected_components(
     of the component.  Nodes appearing in no edge are absent (caller
     coalesces singletons, see :func:`assign_clusters`).
 
-    Round mechanics (r1 BENCH showed the loop's *fixed* costs —
-    checkpoints, signature jobs, task launches across
-    ``spark.sql.shuffle.partitions`` tasks per stage — scaling
-    *negatively* 8→32 cores on a small frontier): per-round shuffle
-    width is sized to the live frontier (clamp(|edges|/250k, 8,
-    session default)), so a shrinking edge set stops paying full-width
-    task launches per stage.  Measured on an 834k-edge frontier
-    (within one JVM, min-of-2): 4.5 s @8 cores / 5.8 s @32 vs 5.2 /
-    12.5 at session width.  Batching extra star rounds between
-    convergence checks was measured and rejected — overshooting the
-    fixpoint costs more than the saved per-round jobs.
+    The edges are oriented hi→lo, deduplicated and checkpointed.  Then
+    the star check (:func:`_star_check`) is the convergence test: edges
+    in star form are the fixpoint, so the loop stops there, and a match
+    graph that is already stars runs no star round at all.  Otherwise
+    one large-star + small-star round runs and is checkpointed, and the
+    check repeats.  ``cfg.max_rounds`` caps the star rounds.
+
+    Per-round shuffle width is sized to the live frontier (clamp(
+    |edges|/250k, 8, session default)), so a shrinking edge set stops
+    paying full-width task launches per stage.  Measured on an
+    834k-edge frontier (within one JVM, min-of-2): 4.5 s @8 cores /
+    5.8 s @32 vs 5.2 / 12.5 at session width.
     """
     cfg = cfg or ClusteringConfig()
     spark = edges.sparkSession
-    default_sp = spark.conf.get("spark.sql.shuffle.partitions")
+    default_sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # type-preserving: long ids stay long (8-byte shuffle rows — at
     # 10^12 edges the string cast would triple shuffle volume); any
     # orderable id type works since the algorithm only needs min/</>
-    cur = _dedup(edges.select("src", "dst")).localCheckpoint(eager=True)
-    sig = _signature(cur)
-    for _ in range(cfg.max_rounds):
+    cur = _dedup(
+        edges.select(
+            F.greatest("src", "dst").alias("src"), F.least("src", "dst").alias("dst")
+        )
+    ).localCheckpoint(eager=True)
+    rounds = 0
+    while True:
+        n, star = _star_check(cur)
+        if star:
+            break
+        if rounds == cfg.max_rounds:
+            raise RuntimeError(
+                f"connected_components did not converge in {cfg.max_rounds} rounds"
+            )
         # Frontier-sized shuffle width via explicit repartition-by-key
         # INSIDE the star steps — never by mutating the session-global
         # spark.sql.shuffle.partitions (ADVICE r2: a concurrent query on
         # the same SparkSession would silently run at the shrunken
         # width mid-loop).
         parts = max(
-            min(_MIN_LOOP_PARTITIONS, int(default_sp)),
-            min(int(default_sp), -(-sig[0] // _EDGE_ROWS_PER_PARTITION)),
+            min(_MIN_LOOP_PARTITIONS, default_sp),
+            min(default_sp, -(-n // _EDGE_ROWS_PER_PARTITION)),
         )
-        nxt = cur
-        for _ in range(_ROUNDS_PER_CHECKPOINT):
-            nxt = _small_star(_large_star(nxt, parts), parts)
-        nxt = nxt.localCheckpoint(eager=True)
-        nsig = _signature(nxt)
-        cur = nxt
-        if nsig == sig:
-            break
-        sig = nsig
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {cfg.max_rounds} rounds"
-        )
-    # Fixpoint edges form stars (node → root). Roots label themselves.
+        cur = _small_star(_large_star(cur, parts), parts).localCheckpoint(eager=True)
+        rounds += 1
+    # Star form: every src labels once with its root; roots label themselves.
     labels = cur.select(F.col("src").alias("id"), F.col("dst").alias("component_id"))
-    roots = cur.select(F.col("dst").alias("id")).distinct().withColumn(
-        "component_id", F.col("id")
-    )
-    return labels.unionByName(roots).dropDuplicates(["id"])
+    roots = cur.select(F.col("dst").alias("id")).distinct()
+    return labels.unionByName(roots.withColumn("component_id", F.col("id")))
 
 
 def assign_clusters(

@@ -193,8 +193,10 @@ def registered_domain(host: Column) -> Column:
     """Public-suffix resolution (see module docstring): longest match
     against the embedded PSL snapshot (3-label entries before
     2-label), then the known-second-level-under-2-letter-ccTLD
-    heuristic, then last-two-labels.  Hosts that ARE a public suffix
-    (or have too few labels) pass through unchanged.
+    heuristic, then last-two-labels.  Hosts of two labels or fewer
+    pass through unchanged.  A longer host that is itself a public
+    suffix is cut like any other host: ``k12.ma.us`` → ``ma.us``,
+    ``s3.amazonaws.com`` → ``amazonaws.com``.
 
     Pure codegen'd projection — the snapshot compiles to an InSet over
     the joined trailing labels, no lookup join, no shuffle."""

@@ -8,17 +8,23 @@ jar, so the same contract is implemented over a parquet warehouse
 directory with an explicit ``_SUCCESS``-gated snapshot protocol:
 
 * ``write(name, df)``   — replace ``<warehouse>/<name>`` + append a
-  metrics row (rows written, partitions, wall time, input fingerprint)
-  to the ``_metrics`` table;
+  metrics row (rows written, data files written, wall time, input
+  fingerprint) to the ``_metrics`` table;
 * ``read(name)``        — DataFrame over the snapshot;
 * ``exists(name)``      — resume check: a stage re-runs only when its
   output snapshot is absent or its upstream fingerprint changed.
 
+A write costs one Spark job: the row count is observed during the write
+(``df.observe``), not counted by a second scan, and the ``<name>._meta.json``
+sidecar stores the table's schema, so ``write`` and ``read`` open the
+snapshot without a schema-inference job.  Sidecars written before the
+schema was stored fall back to inference.
+
 The overwrite is in place, not atomic, so ``write`` first deletes the
-``<name>._meta.json`` sidecar and rewrites it only after Spark's
-``_SUCCESS`` marker lands; ``exists`` requires both.  A write that dies
-midway therefore leaves a table that ``exists`` reports absent, and the
-stage re-runs instead of resuming from partial output.
+sidecar and rewrites it only after Spark's ``_SUCCESS`` marker lands;
+``exists`` requires both.  A write that dies midway therefore leaves a
+table that ``exists`` reports absent, and the stage re-runs instead of
+resuming from partial output.
 
 Swapping to Iceberg is a one-class change (see :class:`IcebergCatalog`).
 """
@@ -30,8 +36,9 @@ import shutil
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class TableCatalog:
@@ -62,40 +69,50 @@ class TableCatalog:
             return False
 
     def write(
-        self,
-        name: str,
-        df: DataFrame,
-        mode: str = "overwrite",
-        fingerprint: str | None = None,
-        partition_by: list[str] | None = None,
+        self, name: str, df: DataFrame, fingerprint: str | None = None
     ) -> DataFrame:
-        """Checkpoint ``df`` as table ``name``; returns the re-read table
-        (so downstream stages consume the materialized snapshot, not the
-        live lineage — the resume point)."""
+        """Checkpoint ``df`` as table ``name`` (replacing it); returns the
+        re-read table (so downstream stages consume the materialized
+        snapshot, not the live lineage — the resume point).
+
+        The metrics row records ``rows`` (counted during the write) and
+        ``partitions``, the number of data files written."""
         t0 = time.time()
         path = self._path(name)
         self._meta_path(name).unlink(missing_ok=True)
-        writer = df.write.mode(mode)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(path))
-        out = self.spark.read.parquet(str(path))
-        rows = out.count()
-        nparts = out.rdd.getNumPartitions()
+        obs = Observation()
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+            "overwrite"
+        ).parquet(str(path))
         meta = {
             "table": name,
-            "rows": rows,
-            "partitions": nparts,
+            "rows": obs.get["rows"],
+            "partitions": sum(
+                not f.name.startswith((".", "_")) for f in path.iterdir()
+            ),
             "wall_sec": round(time.time() - t0, 3),
             "fingerprint": fingerprint,
             "written_at_epoch": int(t0),
         }
-        self._meta_path(name).write_text(json.dumps(meta))
+        self._meta_path(name).write_text(
+            json.dumps({**meta, "schema": df.schema.json()})
+        )
         self._append_metrics(meta)
-        return out
+        return self._scan(name, df.schema)
 
     def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(str(self._path(name)))
+        if not self.exists(name):
+            raise FileNotFoundError(
+                f"table {name!r} has no snapshot in warehouse {self.warehouse}"
+            )
+        schema = json.loads(self._meta_path(name).read_text()).get("schema")
+        return self._scan(name, schema and StructType.fromJson(json.loads(schema)))
+
+    def _scan(self, name: str, schema: StructType | None) -> DataFrame:
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(str(self._path(name)))
 
     def drop(self, name: str) -> None:
         shutil.rmtree(self._path(name), ignore_errors=True)
@@ -149,11 +166,8 @@ class IcebergCatalog(TableCatalog):
     def exists(self, name: str, fingerprint: str | None = None) -> bool:  # noqa: ARG002
         return self.spark.catalog.tableExists(self._tbl(name))
 
-    def write(self, name, df, mode="overwrite", fingerprint=None, partition_by=None):
-        w = df.writeTo(self._tbl(name))
-        if partition_by:
-            w = w.partitionedBy(*[F.col(c) for c in partition_by])
-        w.createOrReplace()
+    def write(self, name, df, fingerprint=None):
+        df.writeTo(self._tbl(name)).createOrReplace()
         return self.spark.read.table(self._tbl(name))
 
     def read(self, name: str) -> DataFrame:

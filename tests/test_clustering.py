@@ -50,6 +50,23 @@ def test_long_path_converges_in_log_rounds(spark):
     assert {r.component_id for r in rows} == {"n00000"}
 
 
+def test_star_edges_run_zero_rounds(spark):
+    """Edges that form stars around their minimum id are the fixpoint,
+    in either direction and with duplicates: the star check accepts
+    them before any round, so ``max_rounds=0`` suffices."""
+    edges = GRAPHS["star"] + [("b", "a"), ("a", "c"), ("c", "a")]
+    df = spark.createDataFrame(edges, ["src", "dst"])
+    labels = connected_components(df, ClusteringConfig(max_rounds=0))
+    got = {r.id: r.component_id for r in labels.collect()}
+    assert got == dfs_components_py(edges)
+
+
+def test_path_needs_a_round(spark):
+    df = spark.createDataFrame([("a", "b"), ("b", "c")], ["src", "dst"])
+    with pytest.raises(RuntimeError, match="did not converge in 0 rounds"):
+        connected_components(df, ClusteringConfig(max_rounds=0)).collect()
+
+
 def test_pipeline_cluster_honours_max_rounds(spark, tmp_path):
     """ERPipeline.cluster runs connected components under the pipeline's
     ClusteringConfig: one round cannot close a long chain."""

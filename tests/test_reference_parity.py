@@ -31,7 +31,8 @@ ACM = str(REF / "data" / "ACM_1995_2004.csv")
 DBLP = str(REF / "data" / "DBLP_1995_2004.csv")
 
 pytestmark = pytest.mark.skipif(
-    not (REF / "data").exists(), reason="reference data not present"
+    not (REF / "data").exists(),
+    reason=f"golden parity not run: {REF / 'data'} is absent",
 )
 
 

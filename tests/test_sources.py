@@ -5,6 +5,8 @@ metrics sink (S7 analog), and the synthetic generator's determinism
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -131,6 +133,50 @@ def test_catalog_exists_requires_success_marker(spark, tmp_path):
     (tmp_path / "wh" / "t" / "_SUCCESS").unlink()
     assert not cat.exists("t", "a")
     assert not cat.exists("t")
+
+
+def test_catalog_read_keeps_parquet_schema(spark, tmp_path):
+    """The sidecar schema replaces inference without changing what a
+    reader sees: nested, struct-rid, timestamp and binary columns read
+    back exactly as a plain parquet scan infers them."""
+    cat = TableCatalog(spark, str(tmp_path / "wh"))
+    df = spark.sql(
+        "SELECT array('a', 'b') AS tokens,"
+        " named_struct('h1', 1L, 'h2', -2L) AS rid,"
+        " TIMESTAMP'2024-05-01 12:00:00' AS ts,"
+        " CAST('xy' AS BINARY) AS raw"
+    )
+    written = cat.write("t", df)
+    inferred = spark.read.parquet(str(tmp_path / "wh" / "t")).schema
+    assert written.schema == inferred
+    assert cat.read("t").schema == inferred
+    assert cat.read("t").collect() == df.collect()
+
+
+def test_catalog_empty_write_records_zero_rows(spark, tmp_path):
+    cat = TableCatalog(spark, str(tmp_path / "wh"))
+    cat.write("t", spark.range(10).where(F.col("id") > 100))
+    assert cat.metrics()[0]["rows"] == 0
+    assert cat.read("t").count() == 0
+
+
+def test_catalog_reads_sidecar_without_schema(spark, tmp_path):
+    """A warehouse written before sidecars stored the schema still reads
+    (schema inference)."""
+    cat = TableCatalog(spark, str(tmp_path / "wh"))
+    cat.write("t", spark.range(3), fingerprint="a")
+    meta_path = tmp_path / "wh" / "t._meta.json"
+    meta = json.loads(meta_path.read_text())
+    del meta["schema"]
+    meta_path.write_text(json.dumps(meta))
+    assert cat.exists("t", "a")
+    assert sorted(r.id for r in cat.read("t").collect()) == [0, 1, 2]
+
+
+def test_catalog_read_missing_table_names_it(spark, tmp_path):
+    cat = TableCatalog(spark, str(tmp_path / "wh"))
+    with pytest.raises(FileNotFoundError, match=r"'matched'.*wh"):
+        cat.read("matched")
 
 
 def test_synth_determinism_and_rates(spark):

@@ -46,7 +46,7 @@ def test_url_canonicalize_rules(spark):
 def test_registered_domain_public_suffix_snapshot(spark):
     """r5: the embedded PSL snapshot resolves co.uk/com.au/github.io-
     class suffixes exactly; the r4 heuristic remains the fallback for
-    unlisted 2-letter ccTLDs; hosts that ARE a suffix pass through."""
+    unlisted 2-letter ccTLDs; only hosts of two labels pass through."""
     got = _canon(
         spark,
         [
@@ -60,6 +60,8 @@ def test_registered_domain_public_suffix_snapshot(spark):
             "https://plain.example.com/",  # generic: last two
             "https://github.io/",  # host IS a suffix: unchanged
             "https://co.uk/",  # 2 labels: unchanged
+            "https://k12.ma.us/",  # 3-label suffix: cut like any host
+            "https://s3.amazonaws.com/key",  # 3-label suffix: cut
         ],
     )
     assert got[0].registered_domain == "shop.co.uk"
@@ -72,6 +74,8 @@ def test_registered_domain_public_suffix_snapshot(spark):
     assert got[7].registered_domain == "example.com"
     assert got[8].registered_domain == "github.io"
     assert got[9].registered_domain == "co.uk"
+    assert got[10].registered_domain == "ma.us"
+    assert got[11].registered_domain == "amazonaws.com"
 
 
 def test_host_stats_dup_rate(spark):
