@@ -59,8 +59,8 @@ from entity_resolution_pipeline_spark.operators.dedup import (
     minhash_near_duplicates,
     minhash_signatures,
     ngram_jaccard_duplicates,
-    simhash16,
     simhash_near_duplicates,
+    simhash_table,
 )
 from entity_resolution_pipeline_spark.operators.evaluate import pairwise_f1
 from entity_resolution_pipeline_spark.operators.matching import (
@@ -557,7 +557,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         sigs = minhash_signatures(d, num_hashes=MINHASH_K).withColumnRenamed(
             "id", "doc_id"
         )
-        sh = d.select("doc_id", simhash16("text").cast("long").alias("sh"))
+        sh = simhash_table(d).select(
+            F.col("id").alias("doc_id"), F.col("sh").cast("long").alias("sh")
+        )
         return sigs.join(sh, "doc_id")
 
     q["doc_sketches"] = doc_sketches

@@ -165,8 +165,7 @@ def main() -> None:
     # q7: reference-workload linkage (ACM×DBLP golden config) at x1 and
     # x40 replication — the marginal per-workload time amortizes Spark's
     # fixed job overhead so it compares against the reference's
-    # single-core 0.159-0.298 s (BASELINE.md; scripts/ref_bench.py runs
-    # the min-of-2 x100 variant)
+    # single-core 0.159-0.298 s (BASELINE.md)
     if Path("/root/reference/data").exists():
         from entity_resolution_pipeline_spark.operators.linkage import (
             bipartite_candidate_pairs,

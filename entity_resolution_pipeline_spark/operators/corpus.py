@@ -26,7 +26,6 @@ oracle-portability recipes).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -768,48 +767,6 @@ def source_stats(
     )
 
 
-def _window_md5_udf(k: int):
-    """Arrow-batched window-digest kernel: per document, the md5 hex
-    digest of every ``k``-token shingle (single-space-joined) — the
-    value the DuckDB oracle computes as ``md5(array_to_string(...))``.
-
-    The document's tokens are joined to ONE utf-8 buffer and each
-    window is a zero-copy memoryview slice fed to C md5 — O(k·n) bytes
-    hashed at memcpy speed, versus Spark's interpreted evaluator running
-    a per-window concat+md5 expression tree (~k× the char mass of
-    interpreted work per row)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<string>")
-    def window_md5(toks: pd.Series) -> pd.Series:
-        import hashlib
-        from itertools import accumulate
-
-        md = hashlib.md5
-        out = []
-        for row in toks:
-            n = 0 if row is None else len(row)
-            if n < k:
-                out.append([])
-                continue
-            bs = [t.encode("utf-8") for t in row]
-            mv = memoryview(b" ".join(bs))
-            # cum[i] = total token bytes through token i; token i starts
-            # at cum[i-1] + i (i separator spaces precede it)
-            cum = list(accumulate(len(b) for b in bs))
-            out.append(
-                [
-                    md(
-                        mv[(cum[i - 1] + i if i else 0) : cum[i + k - 1] + i + k - 1]
-                    ).hexdigest()
-                    for i in range(n - k + 1)
-                ]
-            )
-        return pd.Series(out)
-
-    return window_md5
-
-
 def remove_duplicate_spans(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -841,18 +798,22 @@ def remove_duplicate_spans(
     key frequency — same shape as ``contamination_spans``); rebuild
     collects doc-bounded structs.
 
-    The digest kernel is :func:`_window_md5_udf`.  An interpreted
+    The digest kernel is ``functions.window_md5.window_md5_udf``,
+    imported here so that pandas is needed only when this operator
+    runs.  An interpreted
     ``transform(sequence(...), md5(concat_ws(slice)))`` digest was
     slower on every input but ≤ 100-token docs at k = 5 (docs/PLANS.md).
     """
     from pyspark.sql import Window
+
+    from ..functions.window_md5 import window_md5_udf
 
     toks_col = F.filter(
         F.split(F.trim(F.col(text_col)), r"\s+"), lambda x: x != ""
     )
     base = df.select(F.col(id_col).alias("id"), toks_col.alias("toks"))
     tok = base.select("id", F.posexplode("toks").alias("pos", "tok"))
-    grams = _window_md5_udf(k)(F.col("toks"))
+    grams = window_md5_udf(k)(F.col("toks"))
     occ = base.select("id", F.posexplode(grams).alias("pos", "h"))
     winners = occ.groupBy("h").agg(F.min(F.struct("id", "pos")).alias("_w"))
     dups = (

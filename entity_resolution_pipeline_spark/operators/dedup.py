@@ -11,9 +11,12 @@ Scale notes (the part that matters at 10^12 docs):
 
 * MinHash signatures are one shuffle: explode shingles → groupBy(doc) with
   K min() aggregates (map-side partial, no arrays of postings).
-* LSH banding turns all-pairs into an equi-join on (band_idx, band_key);
-  per-bucket fan-out is bounded by a block-size cap exactly like
-  ER blocking (reference precedent pipeline/utils.py:97-101).
+* LSH banding turns all-pairs into an equi-join on (band_idx, band_key)
+  (:func:`_lsh_banded`, shared with the streaming index).
+* Every Jaccard operator verifies its candidates through one join back
+  to the shingle sets (:func:`_verify_pairs`); the capped n-gram
+  candidates come from ``operators.blocking`` (reference precedent
+  pipeline/utils.py:97-101).
 * SimHash bit-bands (pigeonhole: hamming ≤ k → ≥1 of k+1 bands equal)
   replace the quadratic cross-join with an equi-join.
 * Everything is whole-stage-codegen'd builtins; zero Python in the path.
@@ -24,26 +27,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..config import BlockingConfig
 from ..functions.normalize import normalize_text
 from ..functions.text import distinct_tokens, word_ngrams
+from .blocking import candidate_pairs
 
 # ---------------------------------------------------------------------------
 # Exact dedup (hash-groupBy)
 # ---------------------------------------------------------------------------
-
-
-def exact_dup_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Groups of byte-identical normalized texts:
-    → (content_hash, n_docs, keep_id) for groups with n_docs > 1."""
-    h = F.md5(normalize_text(F.col(text_col))).alias("content_hash")
-    return (
-        df.select(h, F.col(id_col))
-        .groupBy("content_hash")
-        .agg(F.count("*").alias("n_docs"), F.min(id_col).alias("keep_id"))
-        .where(F.col("n_docs") > 1)
-    )
 
 
 def dedup_exact(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -88,7 +79,14 @@ def minhash_signatures(
     shingle set — a valid min-wise scheme over the md5 value space and
     byte-portable to any SQL engine (the oracle).  One explode + one
     groupBy with K partial-min aggregates: a single shuffle whose rows
-    are (id, shingle), never per-key posting lists.
+    are (id, shingle), never per-key posting lists.  Docs without a
+    shingle have no row.
+
+    ``streaming.neardup.banded_minhash_index`` computes the same values
+    per row (``array_min ∘ transform``), the only form legal on a
+    streaming DataFrame; on batch input this route measured ~10× less
+    CPU for the signatures and ~4-6× less for the full near-dup job
+    (docs/PLANS.md, "One path per near-duplicate operator").
     """
     sh = df.select(
         F.col(id_col).alias("id"),
@@ -101,6 +99,25 @@ def minhash_signatures(
     return sh.groupBy("id").agg(*aggs)
 
 
+def _lsh_banded(
+    sigs: DataFrame, keep: list[str], bands: int, rows_per_band: int
+) -> DataFrame:
+    """→ (keep…, band_idx, band_key): one row per (doc, LSH band), where
+    band_key = md5 of the band's ``rows_per_band`` signature values
+    joined with '|'."""
+    band_structs = []
+    for b in range(bands):
+        cols = [F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)]
+        band_structs.append(
+            F.struct(F.lit(b).alias("band_idx"), F.md5(F.concat_ws("|", *cols)).alias("band_key"))
+        )
+    return sigs.select(*keep, F.explode(F.array(*band_structs)).alias("band")).select(
+        *keep,
+        F.col("band.band_idx").alias("band_idx"),
+        F.col("band.band_key").alias("band_key"),
+    )
+
+
 def lsh_candidate_pairs(
     sigs: DataFrame, bands: int = 4, rows_per_band: int = 3
 ) -> DataFrame:
@@ -110,15 +127,7 @@ def lsh_candidate_pairs(
     band collide.  The join key is (band_idx, band_key) — pure shuffle
     equi-join, AQE-skew-splittable; no cross join anywhere.
     """
-    band_structs = []
-    for b in range(bands):
-        cols = [F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_structs.append(
-            F.struct(F.lit(b).alias("band_idx"), F.md5(F.concat_ws("|", *cols)).alias("band_key"))
-        )
-    banded = sigs.select(
-        "id", F.explode(F.array(*band_structs)).alias("band")
-    ).select("id", F.col("band.band_idx").alias("band_idx"), F.col("band.band_key").alias("band_key"))
+    banded = _lsh_banded(sigs, ["id"], bands, rows_per_band)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -136,23 +145,17 @@ def shingle_jaccard(c1: Column, c2: Column) -> Column:
     return F.when(union > 0, inter / union).otherwise(F.lit(0.0))
 
 
-def minhash_near_duplicates(
+def _verify_pairs(
+    cands: DataFrame,
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    num_hashes: int = 12,
-    bands: int = 4,
-    shingle_n: int = 3,
+    id_col: str,
+    text_col: str,
+    shingle_n: int,
+    threshold: float,
 ) -> DataFrame:
-    """MinHash→LSH→verify pipeline: → (id1, id2, jaccard) above θ.
-
-    Candidates from banding are *verified* with exact shingle Jaccard
-    (join back to shingle sets), so LSH false positives never ship.
-    """
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    cands = lsh_candidate_pairs(sigs, bands, rows_per_band)
+    """Candidate ``(id1, id2)`` → ``(id1, id2, jaccard)`` with exact
+    shingle Jaccard ≥ θ: both ids join back to their shingle sets in
+    ``df``, so blocking/LSH false positives never ship."""
     sh = df.select(F.col(id_col).alias("id"), shingles(text_col, shingle_n).alias("sh"))
     return (
         cands.join(sh.select(F.col("id").alias("id1"), F.col("sh").alias("sh1")), "id1")
@@ -164,6 +167,25 @@ def minhash_near_duplicates(
         )
         .where(F.col("jaccard") >= threshold)
     )
+
+
+def minhash_near_duplicates(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    threshold: float = 0.5,
+    num_hashes: int = 12,
+    bands: int = 4,
+    shingle_n: int = 3,
+) -> DataFrame:
+    """MinHash→LSH→verify pipeline: → (id1, id2, jaccard) above θ.
+
+    Candidates from banding are *verified* with exact shingle Jaccard,
+    so LSH false positives never ship.
+    """
+    sigs = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
+    cands = lsh_candidate_pairs(sigs, bands, num_hashes // bands)
+    return _verify_pairs(cands, df, id_col, text_col, shingle_n, threshold)
 
 
 def prefix_filter_jaccard_duplicates(
@@ -187,10 +209,9 @@ def prefix_filter_jaccard_duplicates(
     """
     from pyspark.sql import Window
 
-    sh_sets = df.select(
-        F.col(id_col).alias("id"), shingles(text_col, shingle_n).alias("sh")
+    posting = df.select(
+        F.col(id_col).alias("id"), F.explode(shingles(text_col, shingle_n)).alias("key")
     )
-    posting = sh_sets.select("id", F.explode("sh").alias("key"))
     freq = posting.groupBy("key").agg(F.count("*").alias("freq"))
     w_rank = Window.partitionBy("id").orderBy("freq", "key")
     ranked = (
@@ -208,16 +229,7 @@ def prefix_filter_jaccard_duplicates(
         .select("id1", "id2")
         .dropDuplicates(["id1", "id2"])
     )
-    return (
-        cands.join(sh_sets.select(F.col("id").alias("id1"), F.col("sh").alias("sh1")), "id1")
-        .join(sh_sets.select(F.col("id").alias("id2"), F.col("sh").alias("sh2")), "id2")
-        .select(
-            "id1",
-            "id2",
-            F.round(shingle_jaccard(F.col("sh1"), F.col("sh2")), 6).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _verify_pairs(cands, df, id_col, text_col, shingle_n, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -227,46 +239,20 @@ def prefix_filter_jaccard_duplicates(
 _HIGH_HEX = ("8", "9", "a", "b", "c", "d", "e", "f")
 
 
-def simhash16(col: Column | str) -> Column:
-    """16-bit SimHash of the distinct-token set of normalized text.
-
-    Bit *j* is the sign of the (+1/−1) vote over tokens, where token
-    *t* votes +1 iff the high bit of hex digit *j* of md5(t) is set —
-    i.e. ``substr(md5(t), j+1, 1) ∈ [8-f]``.  Pure builtins, and the
-    identical expression is writable in ANSI SQL (the oracle).
-    """
-    toks = distinct_tokens(normalize_text(F.col(col) if isinstance(col, str) else col))
-    bits = []
-    for j in range(16):
-        # sum votes over the token array without exploding: aggregate()
-        bit = (
-            F.aggregate(
-                toks,
-                F.lit(0),
-                lambda acc, t: acc
-                + F.when(F.substring(F.md5(t), j + 1, 1).isin(*_HIGH_HEX), 1).otherwise(-1),
-            )
-            > 0
-        ).cast("int") * F.lit(2**j)
-        bits.append(bit)
-    total = bits[0]
-    for b in bits[1:]:
-        total = total + b
-    return total
-
-
 def simhash_table(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """→ (id, sh): aggregate-route twin of :func:`simhash16`.
+    """→ (id, sh): 16-bit SimHash of the distinct-token set of
+    normalized text.
 
-    The column expression evaluates 16 ``aggregate()`` higher-order
-    functions per row — md5 of every token computed 16×, interpreted.
-    Here: explode tokens, hash each ONCE, 16 conditional-sum aggregates
-    in a single map-side-partial groupBy — whole-stage codegen, one
-    shuffle, ~an order of magnitude faster and the shape that scales.
-    ``explode_outer`` keeps empty docs (all-zero signature), matching
-    the column expression exactly.
+    Bit *j* is the sign of the (+1/−1) vote over tokens, where token
+    *t* votes +1 iff the high bit of hex digit *j* of md5(t) is set —
+    i.e. ``substr(md5(t), j+1, 1) ∈ [8-f]``; the DuckDB oracle writes
+    the same vote in SQL.  Tokens are exploded and hashed ONCE, then 16
+    conditional-sum aggregates run in one map-side-partial groupBy
+    (a per-row ``aggregate()`` fold hashing every token 16× measured
+    ~4× the CPU, docs/PLANS.md).  ``explode_outer`` keeps docs without
+    tokens, with ``sh = 0``.
     """
     toks = df.select(
         F.col(id_col).alias("id"),
@@ -279,8 +265,7 @@ def simhash_table(
         vote = (
             F.when(F.substring("h", j + 1, 1).isin(*_HIGH_HEX), 1)
             .otherwise(-1)
-            # null token (empty doc) votes -1: bit stays 0, same as the
-            # column expression's empty-array fold
+            # null token (empty doc) votes -1: bit stays 0
         )
         aggs.append(F.sum(vote).alias(f"b{j}"))
     g = toks.groupBy("id").agg(*aggs)
@@ -297,7 +282,8 @@ def simhash_near_duplicates(
     text_col: str = "text",
     max_hamming: int = 3,
 ) -> DataFrame:
-    """→ (id1, id2, hamming) with hamming(simhash16) ≤ ``max_hamming``.
+    """→ (id1, id2, hamming) with hamming(:func:`simhash_table`) ≤
+    ``max_hamming``.
 
     Banding via pigeonhole: split the 16 bits into ``max_hamming + 1``
     bands; any pair within the hamming radius agrees exactly on ≥1 band,
@@ -347,34 +333,23 @@ def ngram_jaccard_duplicates(
 ) -> DataFrame:
     """Shingle-blocked exact Jaccard near-dup: → (id1, id2, jaccard) ≥ θ.
 
-    Pairs sharing ≥1 (capped) shingle block are scored with exact
-    shingle Jaccard.  Because θ-Jaccard pairs share ≥1 shingle by
-    definition, blocking loses only pairs whose every common shingle is
-    over the cap — the same recall/cost trade the reference's block cap
-    makes (utils.py:97-101).
+    Pairs sharing ≥1 shingle block of size ``1 < n ≤ max_block_size``
+    (``operators.blocking``'s ``ngram_word`` scheme over normalized
+    text, hot blocks salted) are scored with exact shingle Jaccard.
+    Because θ-Jaccard pairs share ≥1 shingle by definition, blocking
+    loses only pairs whose every common shingle is over the cap — the
+    same recall/cost trade the reference's block cap makes
+    (utils.py:97-101).
     """
-    sh = df.select(F.col(id_col).alias("id"), shingles(text_col, shingle_n).alias("sh"))
-    posting = sh.select("id", F.explode("sh").alias("key"))
-    small = (
-        posting.groupBy("key")
-        .agg(F.count("*").alias("n"))
-        .where((F.col("n") > 1) & (F.col("n") <= max_block_size))
+    norm = df.select(
+        F.col(id_col).alias("id"), normalize_text(F.col(text_col)).alias("text")
     )
-    capped = posting.join(small.select("key"), "key")
-    pairs = (
-        capped.select("key", F.col("id").alias("id1"))
-        .join(capped.select("key", F.col("id").alias("id2")), "key")
-        .where(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-        .dropDuplicates(["id1", "id2"])
+    # blocking keeps 2 ≤ |block| < cap; this operator's cap is inclusive
+    cfg = BlockingConfig(
+        scheme="ngram_word",
+        ngram_n=shingle_n,
+        min_block_size=2,
+        max_block_size=max_block_size + 1,
     )
-    return (
-        pairs.join(sh.select(F.col("id").alias("id1"), F.col("sh").alias("sh1")), "id1")
-        .join(sh.select(F.col("id").alias("id2"), F.col("sh").alias("sh2")), "id2")
-        .select(
-            "id1",
-            "id2",
-            F.round(shingle_jaccard(F.col("sh1"), F.col("sh2")), 6).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    pairs = candidate_pairs(norm, cfg, id_col="id", text_col="text")
+    return _verify_pairs(pairs, df, id_col, text_col, shingle_n, threshold)

@@ -116,7 +116,6 @@ def bipartite_candidate_pairs(
     id_col: str = "paperId",
     text_col: str = "combined",
     hash_keys: bool = True,
-    max_block_product: int | None = None,
     scope_col: str | None = None,
 ) -> DataFrame:
     """→ (id1, id2): pairs sharing ≥1 word n-gram of ``text_col``
@@ -124,10 +123,8 @@ def bipartite_candidate_pairs(
 
     ``hash_keys`` shuffles 8-byte xxhash64 keys instead of n-gram text
     (collisions can only add candidates, which exact scoring then
-    arbitrates).  ``max_block_product`` optionally caps hot keys by the
-    |left block|·|right block| pair fan-out — the scale guard the
-    reference's ngram scheme lacks (its cap exists only in token
-    blocking, utils.py:97-101); None reproduces reference semantics.
+    arbitrates).  Blocks are uncapped, as in the reference's ngram
+    scheme (its cap exists only in token blocking, utils.py:97-101).
     ``scope_col`` optionally scopes blocks to a partition column (pairs
     only form within equal values — e.g. a shard/replica/tenant key).
     """
@@ -149,20 +146,9 @@ def bipartite_candidate_pairs(
             out = out.withColumn("key", F.xxhash64("key"))
         return out
 
-    p1 = postings(left, "id1")
-    p2 = postings(right, "id2")
-    if max_block_product is not None:
-        c1 = p1.groupBy("key").agg(F.count("*").alias("n1"))
-        c2 = p2.groupBy("key").agg(F.count("*").alias("n2"))
-        ok = (
-            c1.join(c2, "key")
-            .where(F.col("n1") * F.col("n2") <= max_block_product)
-            .select("key")
-        )
-        p1 = p1.join(ok, "key", "left_semi")
-        p2 = p2.join(ok, "key", "left_semi")
     return (
-        p1.join(p2, "key")
+        postings(left, "id1")
+        .join(postings(right, "id2"), "key")
         .select("id1", "id2")
         .dropDuplicates(["id1", "id2"])
     )

@@ -77,10 +77,6 @@ from ..operators.weburl import (
 )
 from ..sources.catalog import TableCatalog
 
-#: the always-on core funnel (back-compat name; the full enabled chain
-#: for a config is CurationPipeline.stages())
-STAGES = ("gate", "exact", "neardup", "sample")
-
 #: canonical slot order for ALL stages, enabled or not
 STAGE_ORDER = (
     "url_canon",
@@ -225,19 +221,6 @@ class CurationPipeline:
 
     def stage(self, name: str, force: bool = False) -> DataFrame:
         return self._stage(name, force)[0]
-
-    # back-compat single-stage accessors
-    def gate(self, force: bool = False) -> DataFrame:
-        return self.stage("gate", force)
-
-    def exact(self, force: bool = False) -> DataFrame:
-        return self.stage("exact", force)
-
-    def neardup(self, force: bool = False) -> DataFrame:
-        return self.stage("neardup", force)
-
-    def sample(self, force: bool = False) -> DataFrame:
-        return self.stage("sample", force)
 
     # -- stage builders (each takes the upstream frame) -----------------
 

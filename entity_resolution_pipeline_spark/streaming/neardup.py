@@ -11,7 +11,8 @@ Spark-first shape:
   the shingle set — K seeded-md5 permutations, identical values to
   ``operators.dedup.minhash_signatures``'s explode+groupBy route but
   with NO shuffle), which makes the whole signature+banding transform
-  stateless and therefore legal on a streaming DataFrame;
+  stateless and therefore legal on a streaming DataFrame (on batch
+  input the groupBy route is the faster one, docs/PLANS.md);
 * the arriving batch equi-joins the **static** banded corpus index on
   (band_idx, band_key) — a stream-static join, no state;
 * collisions are verified with exact shingle Jaccard (the corpus index
@@ -30,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from ..operators.dedup import shingle_jaccard, shingles
+from ..operators.dedup import _lsh_banded, shingle_jaccard, shingles
 
 
 def banded_minhash_index(
@@ -42,11 +43,12 @@ def banded_minhash_index(
     shingle_n: int = 3,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """→ (id, sh, band_idx, band_key[, keep_cols]): the LSH index rows
+    """→ (id, sh, keep_cols…, band_idx, band_key): the LSH index rows
     of ``df`` — one row per (document, band).  Pure per-row expressions
     (shingle → K md5 mins → band digests → explode): works identically
-    on batch and streaming inputs."""
-    rows_per_band = num_hashes // bands
+    on batch and streaming inputs.  Docs without a shingle (fewer than
+    ``shingle_n`` tokens) have no rows: their signature would be NULL
+    and every such doc would share one band key."""
     sh = shingles(text_col, shingle_n)
 
     def perm(i: int):
@@ -60,24 +62,45 @@ def banded_minhash_index(
     ]
     with_sigs = df.select(
         F.col(id_col).alias("id"), sh.alias("sh"), *sigs, *[F.col(c) for c in keep_cols]
-    )
-    band_structs = []
-    for b in range(bands):
-        cols = [F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_structs.append(
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.md5(F.concat_ws("|", *cols)).alias("band_key"),
-            )
-        )
-    return with_sigs.select(
-        "id", "sh", *keep_cols, F.explode(F.array(*band_structs)).alias("band")
-    ).select(
-        "id",
-        "sh",
+    ).where(F.size("sh") > 0)
+    return _lsh_banded(with_sigs, ["id", "sh", *keep_cols], bands, num_hashes // bands)
+
+
+def _band_verify(
+    new_index: DataFrame,
+    corpus_index: DataFrame,
+    threshold: float,
+    keep_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """Two :func:`banded_minhash_index` frames → (new_id, corpus_id,
+    keep_cols…, jaccard ≥ θ): equi-join on (band_idx, band_key), then
+    exact shingle Jaccard.  A pair colliding in several bands repeats;
+    the caller dedups it."""
+    ni = new_index.select(
+        F.col("id").alias("new_id"),
+        F.col("sh").alias("sh_new"),
         *keep_cols,
-        F.col("band.band_idx").alias("band_idx"),
-        F.col("band.band_key").alias("band_key"),
+        "band_idx",
+        "band_key",
+    )
+    ci = corpus_index.select(
+        F.col("id").alias("corpus_id"),
+        F.col("sh").alias("sh_corpus"),
+        "band_idx",
+        "band_key",
+    )
+    return (
+        ni.join(ci, ["band_idx", "band_key"])
+        .where(F.col("new_id") != F.col("corpus_id"))
+        .select(
+            "new_id",
+            "corpus_id",
+            *keep_cols,
+            F.round(shingle_jaccard(F.col("sh_new"), F.col("sh_corpus")), 6).alias(
+                "jaccard"
+            ),
+        )
+        .where(F.col("jaccard") >= threshold)
     )
 
 
@@ -90,7 +113,6 @@ def near_dups_against(
     num_hashes: int = 12,
     bands: int = 4,
     shingle_n: int = 3,
-    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Batch twin: → (new_id, corpus_id, jaccard ≥ θ) pairs between
     ``new_docs`` and a pre-built :func:`banded_minhash_index`.
@@ -98,33 +120,10 @@ def near_dups_against(
     ``corpus_index`` is built ONCE (e.g. checkpointed/bucketed on
     (band_idx, band_key)); each new batch only indexes itself.
     """
-    ni = banded_minhash_index(
-        new_docs, id_col, text_col, num_hashes, bands, shingle_n, keep_cols
-    ).select(
-        F.col("id").alias("new_id"),
-        F.col("sh").alias("sh_new"),
-        *[F.col(c) for c in keep_cols],
-        "band_idx",
-        "band_key",
+    ni = banded_minhash_index(new_docs, id_col, text_col, num_hashes, bands, shingle_n)
+    return _band_verify(ni, corpus_index, threshold).dropDuplicates(
+        ["new_id", "corpus_id"]
     )
-    ci = corpus_index.select(
-        F.col("id").alias("corpus_id"),
-        F.col("sh").alias("sh_corpus"),
-        "band_idx",
-        "band_key",
-    )
-    joined = ni.join(ci, ["band_idx", "band_key"]).where(
-        F.col("new_id") != F.col("corpus_id")
-    )
-    verified = joined.select(
-        "new_id",
-        "corpus_id",
-        *keep_cols,
-        F.round(shingle_jaccard(F.col("sh_new"), F.col("sh_corpus")), 6).alias(
-            "jaccard"
-        ),
-    ).where(F.col("jaccard") >= threshold)
-    return verified.dropDuplicates(["new_id", "corpus_id"])
 
 
 def _hadoop_fs(spark, dir_str: str):
@@ -438,30 +437,7 @@ def stream_near_dups(
     wm = stream_docs.withWatermark(ts_col, watermark)
     ni = banded_minhash_index(
         wm, id_col, text_col, num_hashes, bands, shingle_n, keep_cols=(ts_col,)
-    ).select(
-        F.col("id").alias("new_id"),
-        F.col("sh").alias("sh_new"),
-        F.col(ts_col),
-        "band_idx",
-        "band_key",
     )
-    ci = corpus_index.select(
-        F.col("id").alias("corpus_id"),
-        F.col("sh").alias("sh_corpus"),
-        "band_idx",
-        "band_key",
+    return _band_verify(ni, corpus_index, threshold, (ts_col,)).dropDuplicatesWithinWatermark(
+        ["new_id", "corpus_id"]
     )
-    verified = (
-        ni.join(ci, ["band_idx", "band_key"])
-        .where(F.col("new_id") != F.col("corpus_id"))
-        .select(
-            "new_id",
-            "corpus_id",
-            F.col(ts_col),
-            F.round(shingle_jaccard(F.col("sh_new"), F.col("sh_corpus")), 6).alias(
-                "jaccard"
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-    return verified.dropDuplicatesWithinWatermark(["new_id", "corpus_id"])

@@ -65,7 +65,7 @@ def test_curation_funnel_and_resume(spark, tmp_path, corpus_path):
         spark, cat, corpus_path,
         CurationConfig(rates={"en": 0.5, "de": 0.0}, minhash_threshold=0.5),
     )
-    sampled = pipe2.sample()
+    sampled = pipe2.stage("sample")
     langs = {r.lang for r in sampled.collect()}
     assert "de" not in langs
     stamps3 = {m["table"]: m["written_at_epoch"] for m in cat.metrics()}

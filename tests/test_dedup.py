@@ -11,12 +11,11 @@ from pyspark.sql import functions as F
 
 from entity_resolution_pipeline_spark.operators.dedup import (
     dedup_exact,
-    exact_dup_groups,
     minhash_near_duplicates,
     minhash_signatures,
     ngram_jaccard_duplicates,
-    simhash16,
     simhash_near_duplicates,
+    simhash_table,
 )
 
 from .helpers import normalize_py
@@ -43,8 +42,6 @@ def test_exact_dedup(spark):
     df, rows = _docs(spark)
     kept = {r.doc_id for r in dedup_exact(df).collect()}
     assert kept == {0, 2, 3, 4, 5}  # 1 collapses into 0
-    groups = exact_dup_groups(df).collect()
-    assert len(groups) == 1 and groups[0].n_docs == 2 and groups[0].keep_id == 0
 
 
 def test_minhash_signature_oracle(spark):
@@ -75,22 +72,32 @@ def test_minhash_near_dups_find_planted(spark):
         assert jac == pytest.approx(len(s1 & s2) / len(s1 | s2), abs=1e-6)
 
 
+def _simhash_py(text: str) -> int:
+    votes = [0] * 16
+    for t in set(normalize_py(text).split()):
+        h = hashlib.md5(t.encode()).hexdigest()
+        for j in range(16):
+            votes[j] += 1 if h[j] in "89abcdef" else -1
+    return sum(1 << j for j in range(16) if votes[j] > 0)
+
+
 def test_simhash_identical_and_bounds(spark):
-    df, _ = _docs(spark)
-    out = {r.doc_id: r.sh for r in df.select(
-        "doc_id", simhash16("text").alias("sh")
-    ).collect()}
+    df, rows = _docs(spark)
+    # docs without tokens keep a row, hashed to 0
+    extra = [(6, ""), (7, "?! ...")]
+    df = df.unionByName(spark.createDataFrame(extra, df.schema))
+    out = {r.id: r.sh for r in simhash_table(df).collect()}
     assert out[0] == out[1]  # same normalized token set
     assert all(0 <= v < 2**16 for v in out.values())
+    assert out == {i: _simhash_py(t) for i, t in rows + extra}
+    assert out[6] == out[7] == 0
 
 
 def test_simhash_near_dups_vs_bruteforce(spark):
     """Banded candidate join must recover EXACTLY the brute-force
     hamming≤k pair set (pigeonhole guarantees no false negatives)."""
     df, rows = _docs(spark)
-    hashes = {r.doc_id: r.sh for r in df.select(
-        "doc_id", simhash16("text").alias("sh")
-    ).collect()}
+    hashes = {r.id: r.sh for r in simhash_table(df).collect()}
     for k in (1, 3):
         got = {(r.id1, r.id2) for r in simhash_near_duplicates(df, max_hamming=k).collect()}
         exp = {

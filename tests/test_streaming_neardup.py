@@ -99,6 +99,22 @@ def test_stream_near_dups_restart_exactly_once(spark, tmp_path, corpus_index):
     assert {(n, c) for n, c, _ in got} == {(101, 1), (103, 3)}
 
 
+def test_shingle_less_docs_get_no_index_rows(spark):
+    """Docs with fewer than ``shingle_n`` tokens have no signature; they
+    must not be indexed, or they would all share one band key (md5 of
+    an empty join) and pair with each other."""
+    docs = spark.createDataFrame(
+        [(1, "hi there"), (2, "ok"), (3, ""), (4, None)], "doc_id long, text string"
+    )
+    idx = banded_minhash_index(docs)
+    assert idx.count() == 0
+    assert near_dups_against(docs, idx, threshold=0.0).count() == 0
+    # a regular doc still indexes one row per band
+    assert banded_minhash_index(
+        spark.createDataFrame(CORPUS[:1], "doc_id long, text string")
+    ).count() == 4
+
+
 def test_rowwise_signatures_match_groupby_route(spark):
     """The per-row (streaming-safe) signature computation equals the
     batch explode+groupBy route in operators.dedup bit-for-bit."""
