@@ -4,9 +4,15 @@ All pure Column expressions — tokenization is `split`, word n-grams are
 a `transform(sequence(...))` over the token array (reference computes
 them row-wise in Python at pipeline/utils.py:23-30), char n-grams use
 the reference's space-padding convention (pipeline/utils.py:12-19).
+
+The n-gram builders bind their input with :func:`let` before any
+lambda refers to it, so it is evaluated once per row, not once per
+window.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -35,37 +41,66 @@ def tokens_without_stopwords(col: Column | str) -> Column:
     return F.array_except(distinct_tokens(col), F.array(*[F.lit(s) for s in STOPWORDS]))
 
 
+def let(value: Column | str, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row.
+
+    Written ``transform(array(value), body)[0]``: the one-element array
+    holds the evaluated value and ``body`` sees it as a lambda variable.
+    A lambda that captures an outer expression instead re-evaluates it
+    on every call, e.g. ``normalize_text``'s two ``regexp_replace`` once
+    per n-gram window, and whole-stage codegen does not share
+    subexpressions under a higher-order function.  NULL ``value`` →
+    ``body(NULL)``."""
+    v = F.col(value) if isinstance(value, str) else value
+    return F.transform(F.array(v), body)[0]
+
+
+def token_ngrams(toks: Column, n: int) -> Column:
+    """Space-joined n-token windows of a token array column; [] when it
+    has fewer than n tokens (or is NULL)."""
+    return let(
+        toks,
+        lambda t: F.when(
+            F.size(t) >= n,
+            F.transform(
+                F.sequence(F.lit(1), F.size(t) - (n - 1)),
+                lambda i: F.concat_ws(" ", F.slice(t, i, n)),
+            ),
+        ).otherwise(F.array().cast("array<string>")),
+    )
+
+
 def word_ngrams(col: Column | str, n: int) -> Column:
     """Space-joined word n-grams of normalized text
     (pipeline/utils.py:23-30): sliding window of n tokens.
 
-    Pure SQL: transform(sequence(0, size-n)) → slice → concat.  Returns
-    [] when the text has fewer than n tokens, like the reference.
+    Pure SQL: transform(sequence(1, size-n+1)) → slice → concat over the
+    tokens, which are computed once per row.  Returns [] when the text
+    has fewer than n tokens, like the reference.
     """
-    toks = tokens(col)
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    return let(col, lambda s: token_ngrams(tokens(s), n))
 
 
 def char_ngrams(col: Column | str, n: int = 3) -> Column:
     """Distinct character n-grams with (n-1)-space padding on both ends
     (pipeline/utils.py:12-19).  Empty/None text → [] (reference returns
     an empty set)."""
-    c = F.col(col) if isinstance(col, str) else col
-    pad = " " * (n - 1)
-    padded = F.concat(F.lit(pad), c, F.lit(pad))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.length(padded) - (n - 1)),
-        lambda i: F.substring(padded, i, n),
+    pad = F.lit(" " * (n - 1))
+    return let(
+        col,
+        lambda s: F.when(
+            F.length(s) > 0,
+            let(
+                F.concat(pad, s, pad),
+                lambda p: F.array_distinct(
+                    F.transform(
+                        F.sequence(F.lit(1), F.length(p) - (n - 1)),
+                        lambda i: F.substring(p, i, n),
+                    )
+                ),
+            ),
+        ).otherwise(F.array().cast("array<string>")),
     )
-    return F.when(
-        (c.isNotNull()) & (F.length(c) > 0), F.array_distinct(grams)
-    ).otherwise(F.array().cast("array<string>"))
 
 
 # ---------------------------------------------------------------------------
@@ -150,12 +185,18 @@ def doc_fingerprint(col: Column | str, k: int = 8) -> Column:
     selection with a single global window).  Near-identical docs share
     the fingerprint with high probability; portable to SQL byte-for-byte
     (md5 hex + lexicographic min)."""
-    c = normalize_col(F.col(col) if isinstance(col, str) else col)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(c) - (k - 1), F.lit(1))),
-        lambda i: F.md5(F.substring(c, i, k)),
+    return let(
+        normalize_col(F.col(col) if isinstance(col, str) else col),
+        lambda c: F.when(
+            F.length(c) > 0,
+            F.array_min(
+                F.transform(
+                    F.sequence(F.lit(1), F.greatest(F.length(c) - (k - 1), F.lit(1))),
+                    lambda i: F.md5(F.substring(c, i, k)),
+                )
+            ),
+        ).otherwise(F.lit(None)),
     )
-    return F.when(F.length(c) > 0, F.array_min(grams)).otherwise(F.lit(None))
 
 
 def normalize_col(c: Column) -> Column:

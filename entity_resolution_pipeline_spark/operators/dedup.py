@@ -84,9 +84,10 @@ def minhash_signatures(
 
     ``streaming.neardup.banded_minhash_index`` computes the same values
     per row (``array_min ∘ transform``), the only form legal on a
-    streaming DataFrame; on batch input this route measured ~10× less
-    CPU for the signatures and ~4-6× less for the full near-dup job
-    (docs/PLANS.md, "One path per near-duplicate operator").
+    streaming DataFrame; on batch input this route measured cheaper
+    (sf0.1: 4.3 vs 5.0 CPU-s for the signatures, 4.7 vs 10.7 s wall for
+    the full near-dup job; docs/PLANS.md, "One path per near-duplicate
+    operator").
     """
     sh = df.select(
         F.col(id_col).alias("id"),
@@ -104,14 +105,19 @@ def _lsh_banded(
 ) -> DataFrame:
     """→ (keep…, band_idx, band_key): one row per (doc, LSH band), where
     band_key = md5 of the band's ``rows_per_band`` signature values
-    joined with '|'."""
+    joined with '|'.  A doc with a NULL signature (no shingle) has no
+    rows: it would otherwise get band key ``md5('')`` in every band and
+    collide with every other such doc.  The test sits inside the
+    explode, not in a filter, because a filter on ``sig_0`` would be
+    pushed below the projection that computes it and re-run it."""
     band_structs = []
     for b in range(bands):
         cols = [F.col(f"sig_{b * rows_per_band + r}") for r in range(rows_per_band)]
         band_structs.append(
             F.struct(F.lit(b).alias("band_idx"), F.md5(F.concat_ws("|", *cols)).alias("band_key"))
         )
-    return sigs.select(*keep, F.explode(F.array(*band_structs)).alias("band")).select(
+    band_rows = F.when(F.col("sig_0").isNotNull(), F.array(*band_structs))
+    return sigs.select(*keep, F.explode(band_rows).alias("band")).select(
         *keep,
         F.col("band.band_idx").alias("band_idx"),
         F.col("band.band_key").alias("band_key"),

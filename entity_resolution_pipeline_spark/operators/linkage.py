@@ -36,6 +36,7 @@ from pyspark.sql.types import (
 
 from ..functions.normalize import normalize_text, squeeze_lower
 from ..functions.similarity import levenshtein_sim
+from ..functions.text import token_ngrams
 from .clustering import connected_components
 
 PUBLICATION_SCHEMA = StructType(
@@ -97,16 +98,7 @@ def _combined_ngrams(col, n: int):
     """Word n-grams of ``combined`` with the reference's ``str.split()``
     tokenization (utils.py:23-30): empty tokens from repeated spaces are
     dropped, so split on ' +' after trim."""
-    toks = F.split(F.trim(col), " +")
-    return F.when(
-        F.size(toks) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    return F.array_distinct(token_ngrams(F.split(F.trim(col), " +"), n))
 
 
 def bipartite_candidate_pairs(

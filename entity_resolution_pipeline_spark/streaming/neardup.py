@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
 
+from ..functions.text import let
 from ..operators.dedup import _lsh_banded, shingle_jaccard, shingles
 
 
@@ -56,13 +57,18 @@ def banded_minhash_index(
         # bind to transform's (value, index) variant
         return lambda s: F.md5(F.concat(F.lit(f"{i}:"), s))
 
-    sigs = [
-        F.array_min(F.transform(sh, perm(i))).alias(f"sig_{i}")
-        for i in range(num_hashes)
-    ]
+    # one struct per row, so the shingle set is built once, not once
+    # per signature
+    row = let(
+        sh,
+        lambda s: F.struct(
+            s.alias("sh"),
+            *[F.array_min(F.transform(s, perm(i))).alias(f"sig_{i}") for i in range(num_hashes)],
+        ),
+    )
     with_sigs = df.select(
-        F.col(id_col).alias("id"), sh.alias("sh"), *sigs, *[F.col(c) for c in keep_cols]
-    ).where(F.size("sh") > 0)
+        F.col(id_col).alias("id"), row.alias("m"), *[F.col(c) for c in keep_cols]
+    ).select("id", "m.*", *keep_cols)
     return _lsh_banded(with_sigs, ["id", "sh", *keep_cols], bands, num_hashes // bands)
 
 

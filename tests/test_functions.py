@@ -5,6 +5,8 @@ helpers.py) and, where an oracle-parity contract exists, vs DuckDB.
 
 from __future__ import annotations
 
+import hashlib
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -21,9 +23,11 @@ from entity_resolution_pipeline_spark.functions.similarity import (
 )
 from entity_resolution_pipeline_spark.functions.text import (
     char_ngrams,
+    doc_fingerprint,
     token_count,
     word_ngrams,
 )
+from entity_resolution_pipeline_spark.operators.linkage import _combined_ngrams
 
 from .helpers import (
     char_ngrams_py,
@@ -78,15 +82,44 @@ def test_normalize_sql_twin_matches_duckdb(spark):
 
 
 def test_word_ngrams(spark):
-    texts = ["a b c d e", "a b", "a b c", ""]
+    texts = ["a b c d e", "a b", "a b c", "", None]
     got = _one_col(spark, texts, word_ngrams("s", 3))
-    assert got == [word_ngrams_py(t, 3) for t in texts]
+    assert got == [word_ngrams_py(t or "", 3) for t in texts]
+    # it takes normalized text: a single-space split keeps the empty
+    # token a run of spaces leaves, so raw text is normalized first
+    assert _one_col(spark, ["a  b c"], word_ngrams("s", 3)) == [["a  b", " b c"]]
+    assert _one_col(spark, ["a  b c"], word_ngrams(normalize_text("s"), 3)) == [["a b c"]]
+
+
+def test_combined_ngrams_match_str_split(spark):
+    """Linkage's n-grams tokenize like the reference's ``str.split()``
+    (utils.py:23-30) and keep the first occurrence of each n-gram."""
+    texts = ["a  b   c d", "  a b c d  ", "a b", "", None, "x y z x y z"]
+    got = _one_col(spark, texts, _combined_ngrams(F.col("s"), 3))
+    assert got == [list(dict.fromkeys(word_ngrams_py(t or "", 3))) for t in texts]
 
 
 def test_char_ngrams(spark):
-    texts = ["abc", "ab", "", "hello world"]
+    texts = ["abc", "ab", "", "hello world", None]
     got = _one_col(spark, texts, char_ngrams("s", 3))
     assert [set(g) for g in got] == [char_ngrams_py(t, 3) for t in texts]
+
+
+def test_doc_fingerprint_is_min_window_md5(spark):
+    """Minimum md5 over the 8-character windows of the normalized text;
+    text shorter than a window is its own window; text that normalizes
+    to nothing has no fingerprint."""
+
+    def fingerprint_py(text):
+        t = normalize_py(text)
+        if not t:
+            return None
+        windows = [t[i : i + 8] for i in range(max(len(t) - 7, 1))]
+        return min(hashlib.md5(w.encode()).hexdigest() for w in windows)
+
+    texts = [*CASES, "Short", "!!!", None]
+    got = _one_col(spark, texts, doc_fingerprint("s", 8))
+    assert got == [fingerprint_py(t) for t in texts]
 
 
 def test_token_count(spark):
